@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR. Prints the full per-query JSON line, then a short
   * parse-safe summary line last (the driver tail-captures stdout).
@@ -15,9 +13,6 @@ import org.apache.spark.sql.SparkSession
   * in 1.2 s isolated); min-of-N decouples it, and interleaving the reps
   * (pass-by-pass, not per-query) keeps one bursty system hiccup from
   * poisoning all N samples of the same query.
-  * Session mirrors Engine.session: AQE on, shuffle partitions sized to
-  * cores (not 200 — at sf0.1 oversized shuffles are pure scheduling
-  * overhead; on a real cluster this knob scales with executor count).
   *
   * If BASELINE_TIMES.json (DuckDB wall-times for the committed oracle SQL
   * on the same data, produced by scripts/baseline_times.py) is present,
@@ -28,8 +23,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = Engine.cpus
     val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt
     // min-of-5: repeated full-suite runs vary ±20% with machine load
     // (r8's driver print moved 25% on environment alone — its b1 floor
@@ -38,29 +32,7 @@ object Bench {
     // ~2 min extra suite time, and the env block below records the
     // floor + load so machine state is readable from the artifact
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // SPARK_GRAFT_BENCH_AQE=false is an A/B probe ONLY (quantifies
-      // AQE's per-stage replan overhead at tiny SF); the engine posture
-      // keeps AQE on — skew joins and runtime coalescing are
-      // load-bearing at scale. Measurement recorded in BASELINE.md.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // mirror Engine.session: AQE-default post-shuffle sizing — the
-      // byte-advisory alternative was measured 2x slower on keyed-window
-      // stages at sf0.1 (see Engine.session comment)
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.parquet.filterPushdown", "true")
-      // static conf, effective because Bench owns the first session in the
-      // JVM: ~100 queries x multiple codegen stages overflow the default
-      // 100-entry generated-class cache, forcing Janino recompiles every
-      // rep and churning the JIT code cache until HotSpot stops compiling
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val spark = Engine.localSession()
     spark.sparkContext.setLogLevel("WARN")
     // A/B probe hook ONLY (the PlanDirDump twin): overrides the Spread
     // gate's byte floor so spread-on/spread-off pairs time from ONE

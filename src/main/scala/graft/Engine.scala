@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Session factory + table catalog for the graft engine.
+/** Session factory for the graft engine: every main and the test base
+  * build their session here, so the oracle checks the engine that is
+  * benchmarked.
   *
   * Scale posture: every knob here is chosen for a real multi-executor
   * cluster and merely *tested* on local[32] — AQE handles runtime
@@ -12,10 +14,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
 
+  /** Local core count for the mains: `SPARK_GRAFT_CPUS`, else the
+    * machine's cores capped at 32. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
+
+  /** [[session]] on `local[cpus]` with one shuffle partition per core
+    * (not 200 — at sf0.1 oversized shuffles are pure scheduling
+    * overhead; on a real cluster this knob scales with executor count). */
+  def localSession(): SparkSession = session(s"local[$cpus]", cpus)
+
   /** Build (or reuse) a session with graft defaults. */
   def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
-    val b = SparkSession
-      .builder()
+    val b = SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -58,12 +69,11 @@ object Engine {
       // static conf (effective when this builder owns the JVM's first
       // session): many distinct plans x multiple codegen stages overflow
       // the default 100-entry generated-class cache and force Janino
-      // recompiles per execution — measured 6x inflation on a1 when
-      // ScaleCurve's 33 plans cycled the default cache
+      // recompiles per execution — measured 6x inflation on a1 when 33
+      // plans cycled the default cache
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       // native expressions (graft_cosine, graft_minhash) + the
-      // transparent corrupt-date rebase rule; sessions built elsewhere
-      // get the same via GraftFunctions.ensureRegistered
+      // transparent corrupt-date rebase rule
       .withExtensions(new GraftExtensions)
     val s = b.getOrCreate()
     // getOrCreate may return a pre-existing session whose extensions
@@ -71,14 +81,4 @@ object Engine {
     GraftFunctions.ensureRegistered(s)
     s
   }
-
-  /** The driver's synthetic star schema (TESTDATA.md). */
-  object tables {
-    def all: Seq[String] = Tables.names
-  }
-
-  /** Read one testdata table from an sf dir (delegates to [[Tables]],
-    * which owns the TIMESTAMP(NANOS) quirk handling). */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    Tables(spark, sfDir, name)
 }

@@ -2,129 +2,54 @@ package graft
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.{call_function, lit}
 import graft.functions.{Barrier, BloomMightContain, BpeTokenCount, CharEntropy, CosineSimilarity, DsirBuckets, LangId, SortedPairs, MinHashSignature, NearestCentroid, NgramHashes, RepetitionStats, ShingleHashes, TokenFingerprint, UnicodeNormalize, VecDot, WinnowStats, GramSpans}
 
 /** Session extension registering graft's native expressions, for use via
   * `spark.sql.extensions=graft.GraftExtensions` or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`.
+  * `withExtensions(new GraftExtensions)` on a session builder.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier(CosineSimilarity.name), CosineSimilarity.info,
-        CosineSimilarity.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(MinHashSignature.name), MinHashSignature.info,
-        MinHashSignature.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(UnicodeNormalize.name), UnicodeNormalize.info,
-        UnicodeNormalize.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(BloomMightContain.name), BloomMightContain.info,
-        BloomMightContain.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(LangId.name), LangId.info, LangId.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(TokenFingerprint.name), TokenFingerprint.info,
-        TokenFingerprint.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(RepetitionStats.name), RepetitionStats.info,
-        RepetitionStats.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(CharEntropy.name), CharEntropy.info,
-        CharEntropy.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(NearestCentroid.name), NearestCentroid.info,
-        NearestCentroid.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(DsirBuckets.name), DsirBuckets.info,
-        DsirBuckets.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(SortedPairs.name), SortedPairs.info,
-        SortedPairs.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(ShingleHashes.name), ShingleHashes.info,
-        ShingleHashes.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(NgramHashes.name), NgramHashes.info,
-        NgramHashes.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(BpeTokenCount.name), BpeTokenCount.info,
-        BpeTokenCount.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(WinnowStats.name), WinnowStats.info,
-        WinnowStats.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(VecDot.name), VecDot.info, VecDot.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(GramSpans.name), GramSpans.info,
-        GramSpans.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(Barrier.name), Barrier.info, Barrier.builder))
+    GraftFunctions.registry.foreach { case (name, info, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), info, builder))
+    }
     ext.injectOptimizerRule(graft.plans.CorruptDateRebaseRule.apply)
   }
 }
 
 object GraftFunctions {
+  /** Every native expression as (SQL name, info, builder): the one list
+    * both the session extension and [[ensureRegistered]] install. */
+  val registry: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    (CosineSimilarity.name, CosineSimilarity.info, CosineSimilarity.builder),
+    (MinHashSignature.name, MinHashSignature.info, MinHashSignature.builder),
+    (UnicodeNormalize.name, UnicodeNormalize.info, UnicodeNormalize.builder),
+    (BloomMightContain.name, BloomMightContain.info, BloomMightContain.builder),
+    (LangId.name, LangId.info, LangId.builder),
+    (TokenFingerprint.name, TokenFingerprint.info, TokenFingerprint.builder),
+    (RepetitionStats.name, RepetitionStats.info, RepetitionStats.builder),
+    (CharEntropy.name, CharEntropy.info, CharEntropy.builder),
+    (NearestCentroid.name, NearestCentroid.info, NearestCentroid.builder),
+    (DsirBuckets.name, DsirBuckets.info, DsirBuckets.builder),
+    (SortedPairs.name, SortedPairs.info, SortedPairs.builder),
+    (ShingleHashes.name, ShingleHashes.info, ShingleHashes.builder),
+    (NgramHashes.name, NgramHashes.info, NgramHashes.builder),
+    (BpeTokenCount.name, BpeTokenCount.info, BpeTokenCount.builder),
+    (WinnowStats.name, WinnowStats.info, WinnowStats.builder),
+    (VecDot.name, VecDot.info, VecDot.builder),
+    (GramSpans.name, GramSpans.info, GramSpans.builder),
+    (Barrier.name, Barrier.info, Barrier.builder))
+
   /** Idempotent runtime registration — for sessions (like the driver's)
     * that were built without the extensions conf. */
   def ensureRegistered(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    val cos = FunctionIdentifier(CosineSimilarity.name)
-    if (!reg.functionExists(cos))
-      reg.registerFunction(cos, CosineSimilarity.info, CosineSimilarity.builder)
-    val mh = FunctionIdentifier(MinHashSignature.name)
-    if (!reg.functionExists(mh))
-      reg.registerFunction(mh, MinHashSignature.info, MinHashSignature.builder)
-    val un = FunctionIdentifier(UnicodeNormalize.name)
-    if (!reg.functionExists(un))
-      reg.registerFunction(un, UnicodeNormalize.info, UnicodeNormalize.builder)
-    val bc = FunctionIdentifier(BloomMightContain.name)
-    if (!reg.functionExists(bc))
-      reg.registerFunction(bc, BloomMightContain.info, BloomMightContain.builder)
-    val li = FunctionIdentifier(LangId.name)
-    if (!reg.functionExists(li))
-      reg.registerFunction(li, LangId.info, LangId.builder)
-    val fp = FunctionIdentifier(TokenFingerprint.name)
-    if (!reg.functionExists(fp))
-      reg.registerFunction(fp, TokenFingerprint.info, TokenFingerprint.builder)
-    val rp = FunctionIdentifier(RepetitionStats.name)
-    if (!reg.functionExists(rp))
-      reg.registerFunction(rp, RepetitionStats.info, RepetitionStats.builder)
-    val ce = FunctionIdentifier(CharEntropy.name)
-    if (!reg.functionExists(ce))
-      reg.registerFunction(ce, CharEntropy.info, CharEntropy.builder)
-    val nc = FunctionIdentifier(NearestCentroid.name)
-    if (!reg.functionExists(nc))
-      reg.registerFunction(nc, NearestCentroid.info, NearestCentroid.builder)
-    val db = FunctionIdentifier(DsirBuckets.name)
-    if (!reg.functionExists(db))
-      reg.registerFunction(db, DsirBuckets.info, DsirBuckets.builder)
-    val sp = FunctionIdentifier(SortedPairs.name)
-    if (!reg.functionExists(sp))
-      reg.registerFunction(sp, SortedPairs.info, SortedPairs.builder)
-    val sh = FunctionIdentifier(ShingleHashes.name)
-    if (!reg.functionExists(sh))
-      reg.registerFunction(sh, ShingleHashes.info, ShingleHashes.builder)
-    val ng = FunctionIdentifier(NgramHashes.name)
-    if (!reg.functionExists(ng))
-      reg.registerFunction(ng, NgramHashes.info, NgramHashes.builder)
-    val bp = FunctionIdentifier(BpeTokenCount.name)
-    if (!reg.functionExists(bp))
-      reg.registerFunction(bp, BpeTokenCount.info, BpeTokenCount.builder)
-    val ws = FunctionIdentifier(WinnowStats.name)
-    if (!reg.functionExists(ws))
-      reg.registerFunction(ws, WinnowStats.info, WinnowStats.builder)
-    val vd = FunctionIdentifier(VecDot.name)
-    if (!reg.functionExists(vd))
-      reg.registerFunction(vd, VecDot.info, VecDot.builder)
-    val gs = FunctionIdentifier(GramSpans.name)
-    if (!reg.functionExists(gs))
-      reg.registerFunction(gs, GramSpans.info, GramSpans.builder)
-    val ba = FunctionIdentifier(Barrier.name)
-    if (!reg.functionExists(ba))
-      reg.registerFunction(ba, Barrier.info, Barrier.builder)
+    registry.foreach { case (name, info, builder) =>
+      val id = FunctionIdentifier(name)
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
+    }
     // sessions built without withExtensions still get the transparent
     // corrupt-date rebase via the user-provided optimizer batch; skip
     // when the extensions path already injected it (double installation

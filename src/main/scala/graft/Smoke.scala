@@ -1,14 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Mimics the driver's t1 smoke: SparkEntry.entry must return >0 rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Engine.localSession()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val n = df.count()

@@ -47,8 +47,8 @@ object Tables {
     *
     * `spark.read.parquet` does driver-side work on EVERY call — file
     * listing plus a footer read for schema inference (~75-100 ms per
-    * table on local[32], measured in Scratch) — before a single row
-    * moves. A real deployment registers tables in a catalog once and
+    * table on local[32]) — before a single row moves. A real
+    * deployment registers tables in a catalog once and
     * resolves by name afterwards; this map is that catalog. Execution
     * is NOT cached (no `.persist`): each action still scans the files,
     * so data freshness only assumes the testdata dirs are immutable

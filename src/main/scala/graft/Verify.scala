@@ -1,18 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * fails is logged to stderr and listed in failures.json (name, exception
+  * class, message); the run still exits 0. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.localSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=j18,l29 (name prefixes): dump a subset for
@@ -29,16 +24,19 @@ object Verify {
     val skip = sys.env.get("SPARK_GRAFT_VERIFY_SKIP")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Nil)
-    SparkEntry.queries
+    val failures = SparkEntry.queries.toSeq
       .filter { case (name, _) =>
         only.forall(_.exists(name.startsWith)) && !skip.exists(name.startsWith) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some((name, e))
+        }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -54,6 +52,11 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val failed = failures.map { case (name, e) =>
+      s"""{"name":${q(name)},"error_class":${q(e.getClass.getName)},""" +
+        s""""message":${q(String.valueOf(e.getMessage))}}"""
+    }.mkString("[", ",\n", "]\n")
+    Files.writeString(Paths.get(s"$outDir/failures.json"), failed)
     spark.stop()
   }
 }

@@ -177,7 +177,7 @@ object QShared {
     * interleave — one drops the table between the other's CREATE and
     * analyzed-resolution. The monitor serializes per table name within
     * the JVM; cross-PROCESS builders sharing a sink dir are serialized
-    * by a file lock on `<path>.lock` (see [[layout]]). Distinct tables
+    * by a file lock on `<path>.lock` (see [[withLayoutLock]]). Distinct tables
     * stay concurrent (the a11/s11 concurrent-jobs path). */
   private val layoutLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -205,26 +205,18 @@ object QShared {
       }
   }
 
-  /** The ONE mtime+length-guarded persisted-layout primitive shared by
-    * [[bucketedFact]] and the l40b/l41 sidecars: build-or-reregister a
-    * bucketed external table at `path`, versioned on `src`, and return
-    * the resolved relation with the catalog entry dropped (the s12
-    * precedent — the resolved plan holds the bucketed file relation, so
-    * the session catalog never accumulates per-dir tables).
-    *
-    * Concurrency: serialized per table name within the JVM (two
-    * concurrent same-layout callers would otherwise race the
-    * DROP/CREATE/resolve/DROP sequence) and per layout path across
-    * processes via a `java.nio` file lock — two drivers sharing one
-    * testdata dir build once and re-register once instead of racing the
-    * overwrite. `build` must write the table itself (saveAsTable with
-    * the path option); the version token is written after it returns.
-    * Freshness is re-checked under the lock, so the loser of a
-    * cross-process race re-registers the winner's files. */
-  def layout(
-      s: SparkSession, table: String, path: String, srcs: Seq[java.io.File],
-      ddl: => String, clusterSpec: String)(build: => Unit): DataFrame = {
-    val monitor = layoutLocks.computeIfAbsent(table, _ => new Object)
+  /** The ONE cross-build lock for persisted layouts: serialized per
+    * `key` within the JVM and per layout `path` across processes via a
+    * `java.nio` file lock on `<path>.lock` — two drivers sharing one
+    * testdata dir build once instead of racing the overwrite. Under the
+    * lock, `build` runs only when the layout's version token is missing
+    * or stale, and the token is written after it returns; `use` then
+    * runs, still under the lock, told whether this call built. The
+    * loser of a cross-process race therefore reuses the winner's files. */
+  private def withLayoutLock[T](
+      key: String, path: String, srcs: Seq[java.io.File])(
+      build: => Unit)(use: Boolean => T): T = {
+    val monitor = layoutLocks.computeIfAbsent(key, _ => new Object)
     monitor.synchronized {
       val lockFile = new java.io.File(path + ".lock")
       Option(lockFile.getParentFile).foreach(_.mkdirs())
@@ -234,27 +226,50 @@ object QShared {
         java.nio.file.StandardOpenOption.WRITE)
       val flock = chan.lock()
       try {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        if (layoutFresh(path, srcs)) {
-          s.sql(s"CREATE TABLE $table ($ddl) USING parquet " +
-            s"$clusterSpec LOCATION '$path'")
-        } else {
+        val built = !layoutFresh(path, srcs)
+        if (built) {
           build
           java.nio.file.Files.write(
             new java.io.File(path, "_GRAFT_SRC_VERSION").toPath,
             srcVersion(srcs).getBytes(
               java.nio.charset.StandardCharsets.UTF_8))
         }
-        val out = s.table(table)
-        out.queryExecution.analyzed // resolve BEFORE the catalog entry drops
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        out
+        use(built)
       } finally {
         flock.release()
         chan.close()
       }
     }
   }
+
+  /** The mtime+length-guarded bucketed-table layout shared by
+    * [[bucketedFact]] and the l40b/l41 sidecars: build-or-reregister a
+    * bucketed external table at `path`, versioned on `src`, and return
+    * the resolved relation with the catalog entry dropped (the s12
+    * precedent — the resolved plan holds the bucketed file relation, so
+    * the session catalog never accumulates per-dir tables).
+    *
+    * Concurrency: [[withLayoutLock]] keyed by table name — two
+    * concurrent same-layout callers would otherwise race the
+    * DROP/CREATE/resolve/DROP sequence. `build` must write the table
+    * itself (saveAsTable with the path option). */
+  def layout(
+      s: SparkSession, table: String, path: String, srcs: Seq[java.io.File],
+      ddl: => String, clusterSpec: String)(build: => Unit): DataFrame =
+    withLayoutLock(table, path, srcs) {
+      s.sql(s"DROP TABLE IF EXISTS $table")
+      build
+    } { built =>
+      if (!built) {
+        s.sql(s"DROP TABLE IF EXISTS $table")
+        s.sql(s"CREATE TABLE $table ($ddl) USING parquet " +
+          s"$clusterSpec LOCATION '$path'")
+      }
+      val out = s.table(table)
+      out.queryExecution.analyzed // resolve BEFORE the catalog entry drops
+      s.sql(s"DROP TABLE IF EXISTS $table")
+      out
+    }
 
   /** Data-sized bucket count for a dir's persisted layouts. The r11
     * three-decade pairing (sf0.1/sf1/sf10) caught the fixed 8-bucket
@@ -351,31 +366,12 @@ object QShared {
   def lineitemByShipYear(s: SparkSession, dir: String): DataFrame = {
     val path = sink(dir, "lineitem_by_shipyear")
     val src = new java.io.File(s"$dir/lineitem.parquet")
-    val monitor = layoutLocks.computeIfAbsent(s"shipyear_$path", _ => new Object)
-    monitor.synchronized {
-      val lockFile = new java.io.File(path + ".lock")
-      Option(lockFile.getParentFile).foreach(_.mkdirs())
-      val chan = java.nio.channels.FileChannel.open(
-        lockFile.toPath,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      val flock = chan.lock()
-      try {
-        if (!layoutFresh(path, Seq(src))) {
-          graft.Tables(s, dir, "lineitem")
-            .withColumn("l_shipyear", year(col("l_shipdate")))
-            .write.mode("overwrite").partitionBy("l_shipyear")
-            .parquet(path)
-          java.nio.file.Files.write(
-            new java.io.File(path, "_GRAFT_SRC_VERSION").toPath,
-            srcVersion(Seq(src)).getBytes(
-              java.nio.charset.StandardCharsets.UTF_8))
-        }
-      } finally {
-        flock.release()
-        chan.close()
-      }
-    }
+    withLayoutLock(s"shipyear_$path", path, Seq(src)) {
+      graft.Tables(s, dir, "lineitem")
+        .withColumn("l_shipyear", year(col("l_shipdate")))
+        .write.mode("overwrite").partitionBy("l_shipyear")
+        .parquet(path)
+    }(_ => ())
     // explicit schema (source schema + the partition column): an EMPTY
     // source writes a zero-partition directory that schema inference
     // cannot read back (UNABLE_TO_INFER_SCHEMA), and a pinned schema is

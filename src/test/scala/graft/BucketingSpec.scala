@@ -209,6 +209,34 @@ class BucketingSpec extends SparkSpec {
     val n2 = build()
     assert(n2 < n1,
       s"same-mtime rewrite must invalidate the layout (got $n2 vs $n1 rows)")
+
+    // the same guard on the date-partitioned lineitem layout: a fresh
+    // source is reused as is, a same-mtime rewrite forces a relayout
+    val liPath = Paths.get(s"$dir/lineitem.parquet")
+    Files.copy(Paths.get(s"$testdataRoot/lineitem.parquet"), liPath,
+      StandardCopyOption.REPLACE_EXISTING)
+    val li = liPath.toFile
+    val lm0 = li.lastModified()
+    def shipYear(): Long = QShared.lineitemByShipYear(spark, dir).count()
+    val token = new java.io.File(
+      QShared.sink(dir, "lineitem_by_shipyear"), "_GRAFT_SRC_VERSION")
+    val y1 = shipYear()
+    assert(y1 > 0 && token.exists())
+    val t1 = token.lastModified()
+    assert(shipYear() == y1)
+    assert(token.lastModified() == t1, "fresh shipyear layout must be reused, not rewritten")
+    val liHalf = spark.read.parquet(liPath.toString)
+      .filter(col("l_orderkey") % 2 === 0)
+    val liTmp = tmpDir("graft-version-key-li-half")
+    liHalf.coalesce(1).write.mode("overwrite").parquet(liTmp)
+    val liPart = new java.io.File(liTmp).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.copy(liPart.toPath, liPath, StandardCopyOption.REPLACE_EXISTING)
+    assert(li.setLastModified(lm0) && li.lastModified() == lm0,
+      "mtime must be restored for the test")
+    val y2 = shipYear()
+    assert(y2 < y1,
+      s"same-mtime rewrite must invalidate the shipyear layout (got $y2 vs $y1 rows)")
   }
 
   test("two concurrent same-layout builders converge (per-table lock)") {
@@ -232,6 +260,17 @@ class BucketingSpec extends SparkSpec {
       })), 120.seconds)
     assert(counts == Seq(expected, expected),
       s"concurrent builders must both resolve the layout: $counts")
+
+    // the date-partitioned lineitem layout shares the same lock
+    Files.copy(Paths.get(s"$testdataRoot/lineitem.parquet"),
+      Paths.get(s"$dir/lineitem.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    val expectedLi = spark.read.parquet(s"$dir/lineitem.parquet").count()
+    val liCounts = Await.result(
+      Future.sequence((1 to 2).map(_ => Future {
+        QShared.lineitemByShipYear(spark, dir).count()
+      })), 120.seconds)
+    assert(liCounts == Seq(expectedLi, expectedLi),
+      s"concurrent shipyear builders must both read the layout: $liCounts")
   }
 
   test("dirBuckets sizes layouts from the dominant fact's bytes") {

@@ -5,16 +5,12 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (getOrCreate → one JVM-wide
-  * session, so suites don't pay repeated startup). */
+  * session, so suites don't pay repeated startup). Built by
+  * [[Engine.session]], so specs run the engine's own settings; the
+  * warehouse dir is a static conf, set in build.sbt's
+  * `Test / javaOptions`. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = Engine.session("local[4]", 4)
 
   /** The driver-generated testdata dir every spec reads (ADVICE r6:
     * single definition, so a relocation is a one-line change). */
