@@ -6,7 +6,7 @@ import graft.queries._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Queries live in `graft.queries.*` as [[QDef]]s (Spark definition +
-  * DuckDB oracle SQL + headline flag); this object is just the
+  * DuckDB oracle SQL); this object is just the
   * aggregation point the driver calls.
   */
 object SparkEntry {
@@ -30,7 +30,4 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(sql => q.name -> sql)).toMap
-
-  /** Benchmark subset (Bench.scala). */
-  def headline: Seq[QDef] = all.filter(_.headline)
 }

@@ -488,7 +488,9 @@ object TextAnalysis {
 
     val pairCount = mutable.HashMap.empty[(String, String), Long]
     // pair → ids of words that (at some point) contained it; entries go
-    // stale after rewrites and are re-checked on use (lazy deletion)
+    // stale after rewrites and are re-checked on use (lazy deletion). A
+    // word is appended once per run of additions, not once per position:
+    // a repeated id is a no-op on use (a merged pair never re-forms)
     val occ = mutable.HashMap.empty[(String, String), mutable.ArrayBuffer[Int]]
     val touched = mutable.HashSet.empty[(String, String)]
     def addPairs(wi: Int, sign: Long): Unit = {
@@ -499,7 +501,10 @@ object TextAnalysis {
         val n = pairCount.getOrElse(p, 0L) + sign * counts(wi)
         if (n == 0L) pairCount.remove(p) else pairCount(p) = n
         touched += p
-        if (sign > 0) occ.getOrElseUpdate(p, mutable.ArrayBuffer.empty) += wi
+        if (sign > 0) {
+          val ids = occ.getOrElseUpdate(p, mutable.ArrayBuffer.empty)
+          if (ids.isEmpty || ids.last != wi) ids += wi
+        }
         i += 1
       }
     }

@@ -45,8 +45,7 @@ object EventsTime extends QGroup {
         |  COUNT(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value,
         |  COUNT(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY 1, 2""".stripMargin),
-      headline = true),
+        |FROM events GROUP BY 1, 2""".stripMargin)),
 
     // G1b: sliding windows (width 10 min, slide 5 min) — each event maps
     // to two window starts; realized as an explode, not a self-join.

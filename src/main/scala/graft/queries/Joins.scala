@@ -140,8 +140,7 @@ object Joins extends QGroup {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin),
-      headline = true),
+        |GROUP BY r_name, n_name""".stripMargin)),
 
     // J12: TPC-H Q5 shape — the canonical join-order benchmark: the
     // fact-fact join (orders⋈lineitem), a mid-size supplier join
@@ -191,8 +190,7 @@ object Joins extends QGroup {
         |WHERE r_name = 'ASIA'
         |  AND o_orderdate >= TIMESTAMP '1996-01-01'
         |  AND o_orderdate <  TIMESTAMP '1997-01-01'
-        |GROUP BY n_name""".stripMargin),
-      headline = true),
+        |GROUP BY n_name""".stripMargin)),
 
     // J8: as-of join — for each error event, the user's latest signup at
     // or before it (union+window operator; DuckDB ASOF JOIN oracle).
@@ -218,8 +216,7 @@ object Joins extends QGroup {
         |  s.event_id AS signup_id, s.value AS signup_value
         |FROM (SELECT * FROM events WHERE event_type = 'error') e
         |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-        |  ON e.user_id = s.user_id AND s.ts <= e.ts""".stripMargin),
-      headline = true),
+        |  ON e.user_id = s.user_id AND s.ts <= e.ts""".stripMargin)),
 
     // J9: event-time range join (impression→click attribution, the batch
     // analog of Streams.clickAttribution). The user_id equality makes

@@ -414,8 +414,7 @@ object LlmOps extends QGroup {
         |  CAST(MAX(n_tokens) AS INTEGER) AS max_tokens
         |FROM tok
         |WHERE n_tokens >= 20 AND lang IN ('en','de','es')
-        |GROUP BY lang, source""".stripMargin),
-      headline = true),
+        |GROUP BY lang, source""".stripMargin)),
 
     // L1g: near-dup clusters (rows-only — minhash isn't oracle-able;
     // semantics pinned in DedupSpec). The O(n) output shape for
@@ -914,8 +913,7 @@ object LlmOps extends QGroup {
         |    ORDER BY sim DESC NULLS LAST, n_id ASC NULLS FIRST) AS rank
         |  FROM sims
         |)
-        |SELECT q_id, rank, n_id, round(sim, 6) AS sim6 FROM ranked WHERE rank <= 5""".stripMargin),
-      headline = true),
+        |SELECT q_id, rank, n_id, round(sim, 6) AS sim6 FROM ranked WHERE rank <= 5""".stripMargin)),
 
     // L2b: LSH-bucketed ANN (the scale path; recall vs brute force is
     // asserted in SimilaritySpec — rows-only here).

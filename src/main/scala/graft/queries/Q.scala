@@ -2,9 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One certified query: a Spark definition, an optional DuckDB oracle
-  * (ANSI SQL over the same parquet tables), and a headline flag for the
-  * benchmark set.
+/** One certified query: a Spark definition and an optional DuckDB
+  * oracle (ANSI SQL over the same parquet tables).
   *
   * Determinism contract (SURVEY §2B): result VALUES are deterministic —
   * float aggregates are computed on DECIMAL(38,6) so summation order
@@ -33,8 +32,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QDef(
     name: String,
     spark: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    headline: Boolean = false)
+    oracle: Option[String])
 
 trait QGroup {
   def defs: Seq[QDef]

@@ -67,7 +67,7 @@ object Relational extends QGroup {
       |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin
 
   def defs: Seq[QDef] = Seq(
-    QDef("a1_agg_q1", q1, Some(q1Sql), headline = true),
+    QDef("a1_agg_q1", q1, Some(q1Sql)),
 
     // A1b: TPC-H Q3 shape — selective filters on two tables, fact-fact
     // join, aggregate, top-k by revenue. The fact-fact join rides the
@@ -111,8 +111,7 @@ object Relational extends QGroup {
         |  AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
         |GROUP BY o_orderkey, odate
         |ORDER BY revenue DESC NULLS LAST, o_orderkey ASC NULLS FIRST
-        |LIMIT 20""".stripMargin),
-      headline = true),
+        |LIMIT 20""".stripMargin)),
 
     // W1b: distribution windows — ntile, percent_rank, cume_dist (exact
     // rational doubles: identical arithmetic on both engines).
@@ -158,8 +157,7 @@ object Relational extends QGroup {
       Some("""SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity,
         |  l_extendedprice, l_discount, l_tax, l_returnflag, l_linestatus,
         |  strftime(l_shipdate, '%Y-%m-%d %H:%M:%S') AS l_shipdate_s
-        |FROM lineitem""".stripMargin),
-      headline = true),
+        |FROM lineitem""".stripMargin)),
 
     // P1: select / rename / reorder.
     QDef("p1_project_rename",
@@ -202,8 +200,7 @@ object Relational extends QGroup {
       Some("""SELECT p_brand, COUNT(*) AS cnt,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand ORDER BY p_brand ASC NULLS FIRST""".stripMargin),
-      headline = true),
+        |GROUP BY p_brand ORDER BY p_brand ASC NULLS FIRST""".stripMargin)),
 
     // J2: fact-fact shuffle join (sort-merge under AQE).
     QDef("j2_shuffle_join",
@@ -218,8 +215,7 @@ object Relational extends QGroup {
       Some("""SELECT o_orderpriority, COUNT(*) AS cnt,
         |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority ASC NULLS FIRST""".stripMargin),
-      headline = true),
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority ASC NULLS FIRST""".stripMargin)),
 
     // A6: global (no-group) aggregate.
     // r11: the countDistinct(l_orderkey) rewrite plans a partial dedup
@@ -262,8 +258,7 @@ object Relational extends QGroup {
         |  ROW_NUMBER() OVER w AS rn, RANK() OVER w AS rnk, DENSE_RANK() OVER w AS drnk
         |FROM lineitem
         |WINDOW w AS (PARTITION BY l_orderkey
-        |             ORDER BY l_extendedprice DESC NULLS LAST, l_linenumber ASC NULLS FIRST)""".stripMargin),
-      headline = true),
+        |             ORDER BY l_extendedprice DESC NULLS LAST, l_linenumber ASC NULLS FIRST)""".stripMargin)),
 
     // O2: global top-k after a total order.
     QDef("o2_topk",

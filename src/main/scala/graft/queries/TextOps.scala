@@ -13,6 +13,16 @@ import graft.operators.{Multimodal, TextAnalysis}
   */
 object TextOps extends QGroup {
 
+  /** l8's email pattern, as the DuckDB oracle runs it (RE2: linear). */
+  val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
+
+  /** [[EmailRe]] with the same matches in linear time on Java's
+    * backtracking engine. Unanchored, a run of n local-part characters
+    * with no '@' after it is retried from each of its n positions. The
+    * leftmost match can only start at a run boundary or where the
+    * previous match ended (`\G`), so the other starts are skipped. */
+  val EmailReLinear = "(?:(?<![A-Za-z0-9._%+-])|\\G)" + EmailRe
+
   def defs: Seq[QDef] = Seq(
 
     // Quality metrics — integer components + composite double (identical
@@ -127,13 +137,15 @@ object TextOps extends QGroup {
     // L8: PII scrubbing — email/phone redaction with counts, the
     // compliance pass every training-data pipeline runs. Deterministic
     // synthetic PII is spliced in per doc_id so the redaction paths are
-    // actually exercised; patterns use only constructs Java regex and
-    // RE2 interpret identically (char classes + bounded repetition —
-    // no backrefs/lookaround). Output is the scrubbed-text digest +
-    // counts: exact, small, hash-portable.
+    // actually exercised; the oracle's patterns use only constructs Java
+    // regex and RE2 interpret identically (char classes + bounded
+    // repetition — no backrefs/lookaround), and the Spark side runs the
+    // email pattern's linear form (EmailRegexPropertySpec pins equal
+    // matches). Output is the scrubbed-text digest + counts: exact,
+    // small, hash-portable.
     QDef("l8_pii_scrub",
       (s, dir) => {
-        val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
+        val emailRe = EmailReLinear
         val phoneRe = "\\d{3}-\\d{3}-\\d{4}"
         // r14: four regex passes + sha2 per doc, scan-linear — the
         // Spread class (row-group-serialized at sf10; no-op at sf0.1)

@@ -1,8 +1,11 @@
 package graft.sources
 
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DateType, MapType, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -59,14 +62,16 @@ object ParquetIO {
     * filters can't rule out" before Spark's own row-group pruning takes
     * over inside each file. Falls back to scanning a file when it has no
     * (or an unreadable) filter — absence can only be proven, never
-    * assumed. */
+    * assumed. The table is listed once and each footer opened once; on
+    * a non-partitioned table no Spark job runs before the action. */
   def readPointLookup(
       spark: SparkSession,
       path: String,
       column: String,
       value: Any): DataFrame = {
-    val schema = spark.read.parquet(path).schema // footer-only
     val eq = col(s"`$column`") === lit(value)
+    val conf = spark.sessionState.newHadoopConf()
+    val listing = ParquetMeta.listing(path, conf)
     // A partition column exists only in directory names, never in the
     // part files — no file carries a bloom filter for it, and a
     // file-list read without basePath would surface it as all-NULL.
@@ -78,9 +83,8 @@ object ParquetIO {
     // can be absent from individual part files, and probing one footer
     // would misroute its lookups to a full scan, defeating the skip
     // index (files genuinely lacking the column are instead kept by
-    // bloomCandidateRowGroups — absence is proven, never assumed).
+    // the bloom probe — absence is proven, never assumed).
     val basePath = new org.apache.hadoop.fs.Path(path)
-    val conf = new org.apache.hadoop.conf.Configuration()
     val fs = basePath.getFileSystem(conf)
     val qualifiedBase = fs.makeQualified(basePath)
     // climb each part file's parents up to the qualified base so only
@@ -88,8 +92,8 @@ object ParquetIO {
     // ancestor directory containing '=' must not produce phantom
     // partition columns (which would silently reroute data-column
     // lookups to a full scan)
-    val partitionCols = ParquetMeta.partFiles(path).iterator.flatMap { f =>
-      val parents = Iterator.iterate(fs.makeQualified(f).getParent)(_.getParent)
+    val partitionCols = listing.files.iterator.flatMap { st =>
+      val parents = Iterator.iterate(fs.makeQualified(st.getPath).getParent)(_.getParent)
         .takeWhile(_ != null).toSeq
       // if the base isn't an ancestor (e.g. `path` IS a single file),
       // there are no partition directories by definition
@@ -101,8 +105,22 @@ object ParquetIO {
     }.toSet
     if (partitionCols.contains(column))
       return spark.read.parquet(path).filter(eq)
-    val candidateFiles = ParquetMeta.bloomCandidateRowGroups(path, column, value)
-      .map(_._1).distinct // full paths — one directory walk, no re-listing
+    val probed = ParquetMeta.bloomProbe(listing.files, column, value, conf)
+    // Without schema merging, Spark infers a flat table's schema from
+    // one footer — the first data file in path order — in a Spark job;
+    // the probe has already read that footer. Partition directories,
+    // summary files or other data files change what Spark reads, so
+    // those tables keep Spark's own inference.
+    val schema =
+      if (listing.flat && !spark.sessionState.conf.isParquetSchemaMergingEnabled) {
+        val (first, footer, _) = probed.head
+        val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        asNullable(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(first.getPath, footer), converter)).asInstanceOf[StructType]
+      } else spark.read.parquet(path).schema
+    val candidateFiles = probed.collect {
+      case (file, _, kept) if kept.nonEmpty => file.getPath.toString
+    }
     if (candidateFiles.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else
@@ -112,6 +130,16 @@ object ParquetIO {
       // file-list read returns them as NULL
       spark.read.option("basePath", path).schema(schema)
         .parquet(candidateFiles: _*).filter(eq)
+  }
+
+  /** `t` with every field, array element and map value nullable, as
+    * Spark's file relation declares an inferred schema. */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /** Bucketed table write: pre-shuffles once at write time so every
@@ -167,8 +195,8 @@ object ParquetIO {
     // only DATA columns can carry DRILL-4203 corruption — partition
     // DATE columns come from directory names, never from the shifted
     // file encodings, and must not be rebased
-    val physical = ParquetMeta.footer(path).getFileMetaData.getSchema
-      .getFields.asScala.map(_.getName).toSet
+    val physical = ParquetMeta.footer(path, spark.sessionState.newHadoopConf())
+      .getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
     val dateCols = df.schema.fields
       .filter(f => f.dataType == DateType && physical.contains(f.name))
       .map(_.name)
@@ -210,8 +238,9 @@ object ParquetIO {
         // mixed-provenance directory would silently shift correct dates
         // by ~13k years (or leave corrupt ones unfixed). Uniform verdict
         // → apply; mixed → refuse loudly.
-        val verdicts = paths.flatMap(p => ParquetMeta.partFiles(p)).map { file =>
-          footerVerdict(spark, file.toString, dateCols)
+        val conf = spark.sessionState.newHadoopConf()
+        val verdicts = paths.flatMap(p => ParquetMeta.filesWithFooters(p, conf)).map {
+          case (file, ft) => footerVerdict(spark, file.toString, ft, dateCols)
         }
         if (verdicts.distinct.size > 1)
           throw new IllegalStateException(
@@ -230,8 +259,8 @@ object ParquetIO {
   private def footerVerdict(
       spark: SparkSession,
       file: String,
+      ft: ParquetMetadata,
       dateCols: Set[String]): Boolean = {
-    val ft = ParquetMeta.footer(file)
     val meta = ft.getFileMetaData
     val kv = meta.getKeyValueMetaData.asScala
     if (kv.contains("drill.version") || kv.contains("dremio.version")) {
@@ -286,7 +315,7 @@ object ParquetIO {
   private def statsThenValueProbe(
       spark: SparkSession,
       file: String,
-      ft: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      ft: ParquetMetadata,
       dateCols: Set[String]): Boolean = {
     var unclear = false
     val corrupt = ft.getBlocks.asScala.exists { block =>

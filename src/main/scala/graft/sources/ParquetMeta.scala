@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -12,72 +13,110 @@ import scala.jdk.CollectionConverters._
   * row counts, row-group stats, writer identification — driver-side
   * footer reads only (a footer is KBs; no data pages are touched), used
   * for planning decisions like the corrupt-date rescue.
+  *
+  * Every footer is read with the caller's Hadoop conf: it builds the
+  * file system, the read options and the per-file decryption lookup
+  * (`parquet.crypto.factory.class`). Callers holding a SparkSession
+  * pass its Hadoop conf; the default is one conf loaded once per JVM.
+  * Each call lists the table once and opens each file once.
   */
 object ParquetMeta {
 
-  /** The parquet part files under `path` (itself, if a plain file) — via
-    * the Hadoop FileSystem API so URI-style and remote paths (file:/,
-    * hdfs://, s3a://) resolve like local ones. Recurses into
-    * subdirectories (skipping _temporary/_SUCCESS/hidden entries) so
-    * partitioned layouts (`p=.../part-*.parquet`) resolve too. */
-  def partFiles(path: String, conf: Configuration = new Configuration()): Seq[Path] = {
+  /** The default conf: loaded once per JVM and never mutated, so a
+    * footer read does not pay for parsing a fresh `Configuration`. */
+  private lazy val jvmConf: Configuration = new Configuration()
+
+  /** One listing of a table: its part files in path order, and whether
+    * they are exactly what Spark's file index reads — a single directory
+    * (or file) of `.parquet` files, with no partition or other
+    * subdirectories, no summary files (`_metadata`, `_common_metadata`)
+    * and no data files under another suffix. */
+  final case class Listing(files: Seq[FileStatus], flat: Boolean)
+
+  /** Lists `path` once — via the Hadoop FileSystem API so URI-style and
+    * remote paths (file:/, hdfs://, s3a://) resolve like local ones.
+    * Recurses into subdirectories (skipping _temporary/_SUCCESS/hidden
+    * entries) so partitioned layouts (`p=.../part-*.parquet`) resolve
+    * too. A plain file lists as itself. */
+  def listing(path: String, conf: Configuration = jvmConf): Listing = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
+    val root = fs.getFileStatus(p)
+    if (!root.isDirectory) return Listing(Seq(root), flat = true)
     def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
-    def walk(d: Path): Seq[Path] = fs.listStatus(d).toSeq
-      .filterNot(st => hidden(st.getPath.getName))
-      .flatMap { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-        else Nil
-      }
-    if (fs.getFileStatus(p).isDirectory) {
-      val parts = walk(p).sortBy(_.toString)
-      if (parts.isEmpty) throw new IllegalArgumentException(s"no parquet files in $path")
-      parts
-    } else Seq(p)
+    def summary(n: String) = n.startsWith("_metadata") || n.startsWith("_common_metadata")
+    var flat = true
+    def walk(d: Path): Seq[FileStatus] = fs.listStatus(d).toSeq.flatMap { st =>
+      val n = st.getPath.getName
+      // Spark's file index reads summary files and `_k=v` directories,
+      // which this listing skips as hidden
+      if (summary(n) || (hidden(n) && n.contains('='))) flat = false
+      if (hidden(n)) Nil
+      else if (st.isDirectory) { flat = false; walk(st.getPath) }
+      else if (n.endsWith(".parquet")) Seq(st)
+      else { flat = false; Nil }
+    }
+    val parts = walk(p).sortBy(_.getPath.toString)
+    if (parts.isEmpty) throw new IllegalArgumentException(s"no parquet files in $path")
+    Listing(parts, flat)
   }
 
-  private def footerOf(p: Path, conf: Configuration): ParquetMetadata = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+  /** The parquet part files under `path` (itself, if a plain file), in
+    * path order; see [[listing]]. */
+  def partFiles(path: String, conf: Configuration = jvmConf): Seq[Path] =
+    listing(path, conf).files.map(_.getPath)
+
+  /** Opens a listed file with read options built from `conf` and the
+    * file's own path, which keeps the per-file decryption lookup. */
+  private def open(file: FileStatus, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+      HadoopReadOptions.builder(conf, file.getPath).build())
+
+  private def footerOf(file: FileStatus, conf: Configuration): ParquetMetadata = {
+    val r = open(file, conf)
     try r.getFooter finally r.close()
   }
 
   /** Footer of `path`; a directory (Spark write output) resolves to its
     * first part file. Use [[footers]] when per-file provenance matters. */
-  def footer(path: String, conf: Configuration = new Configuration()): ParquetMetadata =
-    footerOf(partFiles(path, conf).head, conf)
+  def footer(path: String, conf: Configuration = jvmConf): ParquetMetadata =
+    footerOf(listing(path, conf).files.head, conf)
+
+  /** Every part file of a file-or-directory path with its footer. */
+  def filesWithFooters(path: String, conf: Configuration = jvmConf): Seq[(Path, ParquetMetadata)] =
+    listing(path, conf).files.map(st => st.getPath -> footerOf(st, conf))
 
   /** All part-file footers of a file-or-directory path. */
-  def footers(path: String, conf: Configuration = new Configuration()): Seq[ParquetMetadata] =
-    partFiles(path, conf).map(footerOf(_, conf))
+  def footers(path: String, conf: Configuration = jvmConf): Seq[ParquetMetadata] =
+    filesWithFooters(path, conf).map(_._2)
 
   /** R15: row count from footer only. */
-  def rowCount(path: String): Long =
-    footer(path).getBlocks.asScala.map(_.getRowCount).sum
+  def rowCount(path: String, conf: Configuration = jvmConf): Long =
+    footer(path, conf).getBlocks.asScala.map(_.getRowCount).sum
 
   /** R13 analog: per-row-group (rows, totalByteSize, starting offset). */
-  def rowGroupStats(path: String): Seq[(Long, Long, Long)] =
-    footer(path).getBlocks.asScala.toSeq.map(b =>
+  def rowGroupStats(path: String, conf: Configuration = jvmConf): Seq[(Long, Long, Long)] =
+    footer(path, conf).getBlocks.asScala.toSeq.map(b =>
       (b.getRowCount, b.getTotalByteSize, b.getStartingPos))
 
-  def createdBy(path: String): Option[String] =
-    Option(footer(path).getFileMetaData.getCreatedBy)
+  def createdBy(path: String, conf: Configuration = jvmConf): Option[String] =
+    Option(footer(path, conf).getFileMetaData.getCreatedBy)
 
-  def keyValueMeta(path: String): Map[String, String] =
-    footer(path).getFileMetaData.getKeyValueMetaData.asScala.toMap
+  def keyValueMeta(path: String, conf: Configuration = jvmConf): Map[String, String] =
+    footer(path, conf).getFileMetaData.getKeyValueMetaData.asScala.toMap
 
   /** R21 analog: row-group indexes whose start offset falls in
     * [splitStart, splitStart+len) — Hive/Drill split semantics. */
-  def rowGroupsForSplit(path: String, splitStart: Long, splitLen: Long): Seq[Int] =
-    footer(path).getBlocks.asScala.toSeq.zipWithIndex.collect {
+  def rowGroupsForSplit(path: String, splitStart: Long, splitLen: Long,
+      conf: Configuration = jvmConf): Seq[Int] =
+    footer(path, conf).getBlocks.asScala.toSeq.zipWithIndex.collect {
       case (b, i) if b.getStartingPos >= splitStart &&
         b.getStartingPos < splitStart + splitLen => i
     }
 
   /** Columns that carry a bloom filter in any row group (reference
     * corpus artifact `bloom_filter.bin`: a footer-referenced SBBF). */
-  def bloomFilterColumns(path: String, conf: Configuration = new Configuration()): Seq[String] =
+  def bloomFilterColumns(path: String, conf: Configuration = jvmConf): Seq[String] =
     footer(path, conf).getBlocks.asScala
       .flatMap(_.getColumns.asScala)
       .filter(_.getBloomFilterOffset >= 0)
@@ -88,19 +127,28 @@ object ParquetMeta {
     * `column` might contain `value` — the skip primitive a reader uses
     * on equality predicates: a pair absent from the result is PROVABLY
     * value-free and its pages are never fetched. Walks EVERY part file
-    * of a directory. A row group is kept (must-read) when it has no
-    * filter, the filter can't be decoded, or the probe value can't be
-    * coerced to the column's parquet PHYSICAL type — the filter hashed
-    * physical encodings at write time, so probing with the wrong width
-    * (e.g. a Long against an INT32 column) would silently miss every
-    * file; coercion, not runtime-class dispatch, keeps that sound. */
+    * of a directory; see [[bloomProbe]]. */
   def bloomCandidateRowGroups(path: String, column: String, value: Any,
-      conf: Configuration = new Configuration()): Seq[(String, Int)] =
-    partFiles(path, conf).flatMap { file =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      conf: Configuration = jvmConf): Seq[(String, Int)] =
+    bloomProbe(listing(path, conf).files, column, value, conf).flatMap {
+      case (file, _, kept) => kept.map(file.getPath.toString -> _)
+    }
+
+  /** Each listed file with its footer and the indexes of the row groups
+    * whose bloom filter for `column` might contain `value`, opening each
+    * file once. A row group is kept (must-read) when it has no filter,
+    * the filter can't be decoded, or the probe value can't be coerced to
+    * the column's parquet PHYSICAL type — the filter hashed physical
+    * encodings at write time, so probing with the wrong width (e.g. a
+    * Long against an INT32 column) would silently miss every file;
+    * coercion, not runtime-class dispatch, keeps that sound. */
+  def bloomProbe(files: Seq[FileStatus], column: String, value: Any,
+      conf: Configuration): Seq[(FileStatus, ParquetMetadata, Seq[Int])] =
+    files.map { file =>
+      val r = open(file, conf)
       try {
-        r.getFooter.getBlocks.asScala.toSeq.zipWithIndex.flatMap { case (block, i) =>
-          val keep = block.getColumns.asScala.find(_.getPath.toDotString == column) match {
+        val kept = r.getFooter.getBlocks.asScala.toSeq.zipWithIndex.filter { case (block, _) =>
+          block.getColumns.asScala.find(_.getPath.toDotString == column) match {
             case Some(cc) if cc.getBloomFilterOffset >= 0 =>
               // readBloomFilter returns null when the filter can't be
               // decoded (IO error, encrypted column) → must read
@@ -141,8 +189,8 @@ object ParquetMeta {
               }
             case _ => true // no filter → must read
           }
-          if (keep) Some(file.toString -> i) else None
-        }
+        }.map(_._2)
+        (file, r.getFooter, kept)
       } finally r.close()
     }
 }

@@ -119,8 +119,8 @@ object ZOrder {
     * only (no data pages) — the observability hook the skipping spec
     * asserts on, and what a file-pruning reader would consult. */
   def fileRanges(path: String, column: String): Seq[(String, Long, Long)] =
-    ParquetMeta.footers(path).zip(ParquetMeta.partFiles(path)).flatMap {
-      case (footer, file) =>
+    ParquetMeta.filesWithFooters(path).flatMap {
+      case (file, footer) =>
         import scala.jdk.CollectionConverters._
         val perBlock = footer.getBlocks.asScala.flatMap { block =>
           block.getColumns.asScala

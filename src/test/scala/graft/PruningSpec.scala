@@ -52,6 +52,11 @@ class PruningSpec extends SparkSpec {
       spark.read.parquet(sf("lineitem")).withColumnRenamed("l_orderkey", "lo_key")
         .repartition(4, col("lo_key")),
       "lineitem_sb", buckets = 4, keys = Seq("lo_key"))
+    // restored in `finally` to the values set before the test, so later
+    // specs see the session's own confs
+    val touched = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.legacy.bucketedTableScan.outputOrdering")
+    val prior = touched.map(k => k -> spark.conf.getOption(k))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // trusting on-disk bucket order moved behind a legacy flag in Spark
     // 3.0 (the one-file-per-bucket check costs a file listing); opt in
@@ -69,8 +74,10 @@ class PruningSpec extends SparkSpec {
         s"sorted buckets must eliminate both SMJ sorts:\n$p")
       assert(j.count() == spark.read.parquet(sf("lineitem")).count())
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "false")
+      prior.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
       spark.sql("DROP TABLE IF EXISTS orders_sb")
       spark.sql("DROP TABLE IF EXISTS lineitem_sb")
     }

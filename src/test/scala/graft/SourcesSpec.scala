@@ -6,6 +6,39 @@ import graft.sources.{AvroIO, ParquetIO, ParquetMeta}
 class ParquetIOSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A point lookup's schema must be the one Spark infers for the table,
+    * whether the probe keeps files (hit) or none (miss). */
+  private def assertLookupSchema(dir: String, column: String, hit: Any, miss: Any): Unit = {
+    val want = spark.read.parquet(dir).schema
+    for (v <- Seq(hit, miss))
+      assert(ParquetIO.readPointLookup(spark, dir, column, v).schema == want, s"$column = $v")
+  }
+
+  /** Spark jobs started while `body` runs. A marker job run afterwards
+    * flushes the listener queue, which delivers events in order. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = "jobs-during-" + java.util.UUID.randomUUID()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(group + "-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(group + "-marker"), "listener never saw the marker job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("write modes: errorifexists throws on rewrite, overwrite succeeds, append doubles") {
     val dir = tmpDir("graft-modes") + "/t"
     val df = Seq((1, "a"), (2, "b")).toDF("id", "s")
@@ -47,6 +80,24 @@ class ParquetIOSpec extends SparkSpec {
     // split → row-group mapping covers all groups exactly once
     val all = ParquetMeta.rowGroupsForSplit(sf("lineitem"), 0, Long.MaxValue / 2)
     assert(all == stats.indices.toSeq)
+  }
+
+  test("footer reads honour a property set only on the conf passed in") {
+    // an encrypted footer opens only when the decryption factory is on
+    // the conf the footer is read with
+    val dir = tmpDir("graft-footer-conf") + "/t"
+    Seq((1.5, 2.5f, "x"), (3.5, 4.5f, "y")).toDF("double_field", "float_field", "tag")
+      .repartition(1).write
+      .option("parquet.crypto.factory.class", classOf[graft.sources.CorpusCryptoFactory].getName)
+      .parquet(dir)
+    val conf = spark.sessionState.newHadoopConf()
+    conf.set("parquet.crypto.factory.class", classOf[graft.sources.CorpusCryptoFactory].getName)
+    import scala.jdk.CollectionConverters._
+    assert(ParquetMeta.footers(dir, conf).flatMap(_.getBlocks.asScala).map(_.getRowCount).sum == 2)
+    assert(ParquetMeta.rowGroupStats(dir, conf).map(_._1).sum == 2)
+    // the default conf carries no factory, so the same reads must fail
+    intercept[Exception](ParquetMeta.footers(dir))
+    intercept[Exception](ParquetMeta.rowGroupStats(dir))
   }
 
   test("corrupt-date rescue: on/off/auto") {
@@ -222,6 +273,39 @@ class ParquetIOSpec extends SparkSpec {
     // an absent key scans nothing and returns an empty, correctly-typed frame
     val none = ParquetIO.readPointLookup(spark, dir, "l_orderkey", -999L)
     assert(none.count() == 0 && none.schema.fieldNames.contains("l_suppkey"))
+    assertLookupSchema(dir, "l_orderkey", loKey, -999L)
+  }
+
+  test("a non-partitioned point lookup starts no Spark job before its action") {
+    val dir = tmpDir("graft-bloom-jobs") + "/t"
+    ParquetIO.write(spark.read.parquet(sf("orders"))
+      .select($"o_orderkey", $"o_custkey").repartitionByRange(4, $"o_orderkey"), dir,
+      bloomFilterCols = Seq("o_orderkey"), extraOptions = Map("parquet.enable.dictionary" -> "false"))
+    val key = spark.read.parquet(dir).select($"o_orderkey").head().getLong(0)
+    // the counter sees jobs: Spark's own schema inference runs one
+    assert(jobsDuring(spark.read.parquet(dir).schema) > 0)
+    for (k <- Seq(key, -1L)) {
+      var lookup: org.apache.spark.sql.DataFrame = null
+      assert(jobsDuring { lookup = ParquetIO.readPointLookup(spark, dir, "o_orderkey", k) } == 0,
+        s"lookup of $k started a job before its action")
+      assert(lookup.count() == (if (k == key) 1 else 0))
+    }
+  }
+
+  test("point-lookup schema keeps Spark's nullability on required nested columns") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dir = tmpDir("graft-bloom-nested") + "/t"
+    val schema = StructType(Seq(
+      StructField("k", LongType, nullable = false),
+      StructField("s", StructType(Seq(StructField("a", IntegerType, nullable = false))), nullable = false),
+      StructField("xs", ArrayType(IntegerType, containsNull = false), nullable = false),
+      StructField("m", MapType(StringType, IntegerType, valueContainsNull = false), nullable = false)))
+    val rows = (1L to 200L).map(i => Row(i, Row(i.toInt), Seq(i.toInt), Map("v" -> i.toInt)))
+    ParquetIO.write(spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema), dir,
+      bloomFilterCols = Seq("k"), extraOptions = Map("parquet.enable.dictionary" -> "false"))
+    assertLookupSchema(dir, "k", 7L, -7L)
+    assert(ParquetIO.readPointLookup(spark, dir, "k", 7L).collect().map(_.getLong(0)).toSeq == Seq(7L))
   }
 
   test("bloom probe coerces to the column's physical type (Long probe on INT32)") {
@@ -237,6 +321,8 @@ class ParquetIOSpec extends SparkSpec {
     assert(ParquetMeta.bloomCandidateRowGroups(dir, "k", 42).nonEmpty)
     assert(ParquetMeta.bloomCandidateRowGroups(dir, "k", 999999L).isEmpty)
     assert(ParquetIO.readPointLookup(spark, dir, "k", 42L).count() == 1)
+    // the footer declares `k` required; Spark's relation makes it nullable
+    assertLookupSchema(dir, "k", 42L, 999999L)
   }
 
   test("point lookup composes with the module's own partitioned write") {
@@ -262,6 +348,7 @@ class ParquetIOSpec extends SparkSpec {
       "directory-derived partition values must be recovered (basePath)")
     // partition subdirectories resolve; absent key still proves empty
     assert(ParquetIO.readPointLookup(spark, dir, "o_orderkey", -1L).count() == 0)
+    assertLookupSchema(dir, "o_orderkey", someKey, -1L)
   }
 
   test("point lookup on a PARTITION column falls back to partition pruning") {
@@ -348,7 +435,7 @@ class AvroIOSpec extends SparkSpec {
 
 class ZOrderSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
-  import graft.sources.ZOrder
+  import graft.sources.{ParquetMeta, ZOrder}
 
   test("interleave is the Morton bit pattern") {
     // b0=01, b1=10 -> z bits (from LSB): b0[0]=1, b1[0]=0, b0[1]=0, b1[1]=1 -> 0b1001
@@ -380,6 +467,15 @@ class ZOrderSpec extends SparkSpec {
       .sortWithinPartitions(col("l_orderkey"))
       .write.mode("overwrite").parquet(sPath)
 
+    // footer ranges are each non-empty part file's data min/max, in
+    // path order
+    for (c <- Seq("l_orderkey", "l_partkey")) {
+      val want = ParquetMeta.partFiles(zPath).flatMap { f =>
+        val r = spark.read.parquet(f.toString).agg(min(col(c)), max(col(c))).head()
+        if (r.isNullAt(0)) None else Some((f.getName, r.getLong(0), r.getLong(1)))
+      }
+      assert(ZOrder.fileRanges(zPath, c) == want, c)
+    }
     val zOrd = coverage(ZOrder.fileRanges(zPath, "l_orderkey"))
     val zPart = coverage(ZOrder.fileRanges(zPath, "l_partkey"))
     val sOrd = coverage(ZOrder.fileRanges(sPath, "l_orderkey"))
