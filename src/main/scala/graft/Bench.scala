@@ -34,12 +34,6 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt.max(1)
     val spark = Engine.localSession()
     spark.sparkContext.setLogLevel("WARN")
-    // A/B probe hook ONLY (the PlanDirDump twin): overrides the Spread
-    // gate's byte floor so spread-on/spread-off pairs time from ONE
-    // binary in back-to-back JVMs. Unset for every committed artifact —
-    // the driver's runs never set it, so the gate is always live there.
-    sys.env.get("SPARK_GRAFT_SPREAD_MINBYTES")
-      .foreach(v => spark.conf.set("graft.spread.minBytes", v))
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
 

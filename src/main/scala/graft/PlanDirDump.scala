@@ -18,9 +18,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * its exchange when the scan is narrow AND carries enough bytes), so
   * spread-class evidence must be dumped with SPARK_GRAFT_SF_DIR at the
   * grain where the gate fires and SPARK_GRAFT_CPUS at the bench core
-  * count (the gate compares against defaultParallelism).
-  * SPARK_GRAFT_SPREAD_MINBYTES overrides graft.spread.minBytes — set it
-  * huge to dump the gate-off "before" plan from the same binary.
+  * count (the gate compares against defaultParallelism). The gate has
+  * no override: a gate-off "before" plan is dumped from the parent
+  * commit's binary.
   */
 object PlanDirDump {
   /** Headline queries whose plan shapes PLANS.md pins for review:
@@ -65,8 +65,6 @@ object PlanDirDump {
     }
     val spark = Engine.localSession()
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.get("SPARK_GRAFT_SPREAD_MINBYTES")
-      .foreach(v => spark.conf.set("graft.spread.minBytes", v))
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     // r13 ADVICE: a silently-exit-0 failure leaves an evidence run with
     // missing plan files — track and fail the process instead

@@ -10,25 +10,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * text under a learned merge sequence, via the priority-merge
   * algorithm production tokenizers use (repeatedly merge the
   * LOWEST-RANK pair present, leftmost occurrence first), which is
-  * O(word_len²) per word INDEPENDENT of |merges|.
+  * O(word_len · log word_len) per word INDEPENDENT of |merges|.
   *
-  * Why it exists: the portable Column form
-  * ([[graft.operators.TextAnalysis.applyBpeMerges]]) replays merges as
-  * |merges| chained regexp_replace passes — exactly right at the
-  * spec's 8 merges, but a real subword vocabulary is 30k–50k merges =
-  * tens of thousands of regex passes over every row. Priority
-  * application is equivalent to sequential rank-order replay for every
-  * WELL-FORMED merge table — one where each merge's operands are base
-  * characters or outputs of EARLIER merges, which is what training
-  * produces by construction — because a later-rank merge can then
-  * never create an occurrence of an earlier-rank pair; leftmost-first
-  * greedy tie handling within a rank matches the regex engine's scan.
-  * (An ill-formed table — an early rank referencing a symbol only a
-  * later rank creates — CAN diverge: the sequential replay has passed
-  * the early rank before its operand exists. Trained tables cannot
-  * contain such an entry.) The equivalence is pinned against the regex
-  * path in BpeApplySpec, including on corpora × merge tables TRAINED
-  * by bpeMerges on random text.
+  * Why it exists: the portable Column form replays merges as |merges|
+  * chained regexp_replace passes (kept as BpeApplySpec's reference) —
+  * exactly right at the spec's 8 merges, but a real subword vocabulary
+  * is 30k–50k merges = tens of thousands of regex passes over every
+  * row. Priority application is equivalent to sequential rank-order
+  * replay for every WELL-FORMED merge table — one where each merge's
+  * operands are base characters or outputs of EARLIER merges, which is
+  * what training produces by construction — because a later-rank merge
+  * can then never create an occurrence of an earlier-rank pair;
+  * leftmost-first greedy tie handling within a rank matches the regex
+  * engine's scan. (An ill-formed table — an early rank referencing a
+  * symbol only a later rank creates — CAN diverge: the sequential
+  * replay has passed the early rank before its operand exists. Trained
+  * tables cannot contain such an entry.) The equivalence is pinned
+  * against the regex replay in BpeApplySpec, including on corpora ×
+  * merge tables TRAINED by bpeMerges on random text.
   *
   * Semantics mirror applyBpeMerges' counting: words = split(text, " ")
   * at limit −1 (empty words from repeated spaces contribute 0 tokens);
@@ -67,7 +66,7 @@ case class BpeTokenCount(
 }
 
 /** Preprocessed merge table: rank lookup as a nested map (left →
-  * right → rank) so the per-pair probe allocates nothing. Serializable
+  * right → rank) so the per-pair probe builds no pair key. Serializable
   * — it ships to executors inside the expression. */
 class BpeApplyTable(merges: Seq[(String, String)]) extends Serializable {
   @transient private lazy val rank: java.util.HashMap[String, java.util.HashMap[String, Integer]] = {
@@ -96,36 +95,55 @@ class BpeApplyTable(merges: Seq[(String, String)]) extends Serializable {
     total
   }
 
+  /** Symbol count of one word after priority merging. Symbols are a
+    * linked list over the word's chars (syms(k) is the symbol starting
+    * at char k, null once merged into its left neighbour); every
+    * adjacent pair with a rank sits in a heap keyed on
+    * (rank << 32 | k), so each step merges the lowest-rank, leftmost
+    * pair — the same choice a full rescan makes — in O(log word_len).
+    * A merge invalidates the entries of the pairs it destroyed; they
+    * are dropped when popped, because the pair now starting at their
+    * position no longer has their rank. */
   private def countWord(str: String, from: Int, until: Int): Long = {
     val len = until - from
     if (len == 1) return 1L
-    // symbols as a growable-free array of strings (chars to start)
-    var syms = new Array[String](len)
-    var i = 0
-    while (i < len) { syms(i) = String.valueOf(str.charAt(from + i)); i += 1 }
-    var m = len
-    var done = false
-    while (!done && m > 1) {
-      // find the lowest-rank adjacent pair; leftmost wins ties
-      var bestRank = Int.MaxValue
-      var bestPos = -1
-      var j = 0
-      while (j < m - 1) {
-        val byL = rank.get(syms(j))
-        if (byL != null) {
-          val r = byL.get(syms(j + 1))
-          if (r != null && r.intValue() < bestRank) {
-            bestRank = r.intValue(); bestPos = j
-          }
-        }
-        j += 1
+    val syms = new Array[String](len)
+    val next = new Array[Int](len)
+    val prev = new Array[Int](len)
+    var k = 0
+    while (k < len) {
+      syms(k) = String.valueOf(str.charAt(from + k))
+      next(k) = k + 1
+      prev(k) = k - 1
+      k += 1
+    }
+    // rank of the pair (symbol k, its right neighbour), -1 when unranked
+    def rankAt(k: Int): Int = {
+      val byL = rank.get(syms(k))
+      val r = if (byL == null) null else byL.get(syms(next(k)))
+      if (r == null) -1 else r.intValue()
+    }
+    val heap = new java.util.PriorityQueue[java.lang.Long]()
+    def push(k: Int): Unit =
+      if (k >= 0 && next(k) < len) {
+        val r = rankAt(k)
+        if (r >= 0) heap.add((r.toLong << 32) | k)
       }
-      if (bestPos < 0) done = true
-      else {
-        syms(bestPos) = syms(bestPos) + syms(bestPos + 1)
-        var k = bestPos + 1
-        while (k < m - 1) { syms(k) = syms(k + 1); k += 1 }
+    k = 0
+    while (k < len - 1) { push(k); k += 1 }
+    var m = len
+    while (!heap.isEmpty) {
+      val e: Long = heap.poll()
+      val pos = e.toInt
+      if (syms(pos) != null && next(pos) < len && rankAt(pos) == (e >>> 32).toInt) {
+        val right = next(pos)
+        syms(pos) = syms(pos) + syms(right)
+        syms(right) = null
+        next(pos) = next(right)
+        if (next(right) < len) prev(next(right)) = pos
         m -= 1
+        push(prev(pos))
+        push(pos)
       }
     }
     m.toLong

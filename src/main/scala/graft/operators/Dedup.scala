@@ -64,17 +64,9 @@ object Dedup {
       idCol: String,
       textCol: String,
       numHashes: Int = 64,
-      bands: Int = 16,
-      useNativeExpr: Boolean = true): DataFrame = {
+      bands: Int = 16): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    // native one-pass signature by default (same bits as the HOF path,
-    // verified in DedupSpec; no per-plane intermediate arrays); HOF kept
-    // as the cross-check path.
-    def signatureOf(hashes: Column): Column =
-      if (useNativeExpr)
-        graft.GraftFunctions.minhashNative(df.sparkSession, hashes, numHashes)
-      else minHashSignatureFromHashes(hashes, numHashes)
     // NULL text can't be near-duplicate of anything — left in, every
     // null-text row would hash to the SAME band buckets (the band hash
     // of a null signature degenerates to the constant seed) and pair up.
@@ -85,29 +77,24 @@ object Dedup {
     // scale (split gate); the r13 graft_barrier fence below still owns
     // the CollapseProject hazard.
     val sig = Spread.ifNarrow(df.filter(col(textCol).isNotNull), col(idCol))
-      // native one-pass shingle hashing (graft_shingle_hashes): the HOF
-      // composition allocates five intermediate arrays per row —
-      // bit-identity pinned in DedupSpec; the HOF stays as the
-      // cross-check path behind useNativeExpr=false
+      // native one-pass shingle hashing and signature (graft_shingle_hashes,
+      // graft_minhash): bit-identical to the shingleHashes /
+      // minHashSignatureFromHashes compositions, pinned in DedupSpec,
+      // without their per-row intermediate arrays.
       // r13: graft_barrier replaces the repartition-as-projection-
       // barrier — same single evaluation of sh (and of sig, which the
       // banded posexplode lambda would otherwise re-inline per band),
       // ZERO shuffle of the text/hash payload (guide §2.3/§4.4; the
       // old exchange cost ~0.5 s per query at 32 cores on sf0.1 and
       // moved the whole corpus' shingle arrays at scale).
-      // Scoping note (r13 ADVICE): the fence around SH is load-bearing
-      // only for the useNativeExpr=false cross-check path, where the
-      // HOF signature folds 64 lambdas over sh (inlining = 64 string
-      // passes/row); graft_minhash references sh exactly once, so
-      // inlining into the native path would be harmless. The fence on
-      // SIG below protects both paths (the banding lambda is a HOF).
+      // graft_minhash references sh once, so the fence on SH is not
+      // load-bearing; it is kept so the plan shape PlanSpec locks does
+      // not move. The fence on SIG is: the banding lambda is a HOF.
       .select(col(idCol).as("id"),
         graft.GraftFunctions.barrier(df.sparkSession,
-          if (useNativeExpr)
-            graft.GraftFunctions.shingleHashesNative(df.sparkSession, col(textCol))
-          else shingleHashes(col(textCol))).as("sh"))
+          graft.GraftFunctions.shingleHashesNative(df.sparkSession, col(textCol))).as("sh"))
       .select(col("id"), graft.GraftFunctions.barrier(df.sparkSession,
-        signatureOf(col("sh"))).as("sig"))
+        graft.GraftFunctions.minhashNative(df.sparkSession, col("sh"), numHashes)).as("sig"))
     val banded = sig.select(col("id"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
         xxhash64(slice(col("sig"), b * r + 1, lit(r)), lit(42)))))
@@ -123,25 +110,18 @@ object Dedup {
     * duplication is heavy. [[minHashLshPairs]] materializes O(c²) rows
     * per duplicate clique of size c (measured: 16× amplified docs →
     * 666k pairs from 5k originals); a dedup policy only needs each
-    * doc's cluster representative, which is O(n). Iterative min-label
-    * propagation over the doc↔band-bucket bipartite graph: each round
-    * every bucket takes the min label of its docs and every doc takes
-    * the min label of its buckets (2 keyed shuffles per round, no pair
-    * materialization ever). Rounds run to FIXPOINT — a long duplicate
-    * *chain* (A~B~C~…~Z through distinct buckets) propagates its min
-    * label one doc-hop per round, so any fixed round count silently
-    * splits chains longer than it; the loop instead stops when a round
-    * changes no labels, bounded by `maxIterations` as a safety cap (cap
-    * hit ⇒ loud stderr warning). At 100 TB the few extra rounds are
-    * still cheaper than one pair explosion.
+    * doc's cluster representative, which is O(n). The doc↔band-bucket
+    * incidence goes straight to [[componentsByKey]] — no pair
+    * materialization ever, and its star rounds converge on long
+    * duplicate *chains* (A~B~C~…~Z through distinct buckets) as fast
+    * as on cliques.
     * Output: (id, cluster) where cluster = min doc id reached. */
   def minHashLshClusters(
       df: DataFrame,
       idCol: String,
       textCol: String,
       numHashes: Int = 64,
-      bands: Int = 16,
-      maxIterations: Int = 20): DataFrame = {
+      bands: Int = 16): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
     // NULL-text docs are singleton clusters by definition — banding them
@@ -157,30 +137,21 @@ object Dedup {
       // (was repartition(defaultParallelism); see minHashLshPairs)
       .select(col("id"), graft.GraftFunctions.barrier(df.sparkSession,
         graft.GraftFunctions.minhashNative(df.sparkSession, col("sh"), numHashes)).as("sig"))
-    // no cache() here: propagateMinLabels lazily checkpoints its first
-    // round's output, which materializes this upstream plan exactly
-    // once — a cache() on top was a second full storage write of the
-    // same rows (A/B-measured waste)
+    // no cache() here: componentsByKey checkpoints its incidence
+    // eagerly, which runs this upstream plan exactly once
     val banded = sig.select(col("id"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
         xxhash64(slice(col("sig"), b * r + 1, lit(r)), lit(42)))))
       // LONG bucket key (band index folded into the band hash by one
-      // more xxhash64) instead of a "pos:hash" string: the incidence is
-      // exchanged and sorted twice per propagation round, and an 8-byte
-      // key beats a ~25-byte string on every one of those passes. A
-      // 64-bit collision merges two buckets — the same failure mode
-      // (and magnitude) the 64-bit band hash itself already carries.
+      // more xxhash64) instead of a "pos:hash" string: an 8-byte key
+      // beats a ~25-byte string through every keyed exchange of the
+      // component rounds. A 64-bit collision merges two buckets — the
+      // same failure mode (and magnitude) the 64-bit band hash itself
+      // already carries.
       .select(col("id"), xxhash64(col("col"), col("pos")).as("bucket"))
-    val labels = propagateMinLabels(banded, maxIterations)
     val singletons = df.filter(col(textCol).isNull)
       .select(col(idCol).as("id")).withColumn("label", col("id"))
-    // no output checkpoint: `labels` is already block-backed (the
-    // loop's final lazy checkpoint, materialized by its convergence
-    // probe), so downstream re-reads are block reads + a cheap union —
-    // a third materialization bought nothing. labels' blocks are freed
-    // by the ContextCleaner once the caller drops the result (they are
-    // O(n_docs) rows, not incidence-sized).
-    labels.unionByName(singletons)
+    componentsByKey(banded, "id", "bucket").unionByName(singletons)
       .select(col("id"), col("label").as("cluster"))
   }
 
@@ -196,156 +167,47 @@ object Dedup {
       case _ => ()
     }
 
-  /** Min-label propagation over a doc↔bucket bipartite graph to
-    * fixpoint: each round every bucket takes the min label of its docs
-    * and every doc the min label of its buckets, until a round changes
-    * no label (labels are monotonically non-increasing, so "no row
-    * decreased" IS the fixpoint) or `maxIterations` is hit — the cap is
-    * a runaway guard, not the convergence mechanism, and hitting it
-    * warns on stderr. Each round localCheckpoints LAZILY — the round's
-    * convergence probe is the materializing action, so a round is one
-    * job — which both truncates the per-round lineage growth and lets
-    * the probe re-read the previous round's labels as block reads.
-    *
-    * Input must have columns (id, bucket); output is (id, label) with
-    * one row per distinct id. */
-  private[graft] def propagateMinLabels(
-      bandedIn: DataFrame, maxIterations: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // State is ONE frame: (id, bucket, label), label starting as id.
-    // Each round is two chained whole-partition window mins —
-    //   label := min(label) over (partition by bucket)   // bucket min
-    //   label := min(label) over (partition by id)       // doc min
-    // — exactly the bipartite min propagation, with NO joins and no
-    // separate label table: two keyed exchanges per round instead of
-    // the old join shape's four (labels⋈incidence, groupBy bucket,
-    // bucketMin⋈incidence, groupBy id), and the incidence is read ONCE
-    // per round, so no standing incidence checkpoint is needed either —
-    // round 1's lazy checkpoint materializes the upstream (signature /
-    // n-gram) plan exactly once and later rounds read blocks. Hot-key
-    // skew is no worse than the join shape: a degenerate bucket routed
-    // all its rows through one reduce partition there too (the
-    // join-back side has no partial aggregation).
-    //
-    // Convergence: labels only ever DECREASE, so the Σlabel over
-    // INCIDENCE ROWS is monotone and unchanged ⟺ no row changed ⟺
-    // fixpoint — probed by the same split-BIGINT sum, fused into each
-    // round's materialization. EXACTNESS requires cast("long") to be
-    // injective, so the fast path is gated to INTEGRAL id types;
-    // fractional ids (truncating cast could falsely converge) and
-    // non-numeric ids (ANSI cast crash) take a per-id label-table
-    // equality join instead.
-    import org.apache.spark.sql.types._
-    val numericIds = bandedIn.schema("id").dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case d: DecimalType if d.scale == 0 && d.precision <= 18 => true
-      case _ => false
-    }
-    def rowLabelSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(graft.queries.QShared.splitSum(
-        col("label").cast("long"), Seq(21, 42))).head().getDecimal(0)
-      if (s == null) java.math.BigDecimal.ZERO else s // empty incidence
-    }
-    def labelsOf(df: DataFrame): DataFrame =
-      df.groupBy(col("id")).agg(min(col("label")).as("label"))
-    val wBucket = Window.partitionBy(col("bucket"))
-    val wId = Window.partitionBy(col("id"))
-    var state = bandedIn.select(col("id"), col("bucket"), col("id").as("label"))
-    var prevState: DataFrame = null
-    var prevSum: java.math.BigDecimal = null
-    var converged = false
-    var round = 0
-    while (!converged && round < maxIterations) {
-      round += 1
-      // lazy checkpoint: the convergence probe is the materializing
-      // action — one job per round
-      val next = state
-        .withColumn("label", min(col("label")).over(wBucket))
-        .withColumn("label", min(col("label")).over(wId))
-        .localCheckpoint(false)
-      if (numericIds) {
-        val nextSum = rowLabelSum(next)
-        converged = prevSum != null && nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
-      } else
-        // probe against the IMMEDIATELY preceding round's checkpointed
-        // labels (`state`), not the two-rounds-back snapshot — the old
-        // prevState probe detected the fixpoint one round late and, in
-        // round 2, re-executed the un-checkpointed initial frame's whole
-        // upstream plan. Round 1 is skipped: its `state` is that raw
-        // initial frame, and the first possible fixpoint signal is
-        // "round 2 changed nothing vs round 1" on both probe paths (the
-        // numeric sum needs two samples too).
-        converged = round >= 2 &&
-          labelsOf(next).as("n").join(labelsOf(state).as("p"), "id")
-            .filter(col("n.label") =!= col("p.label")).isEmpty
-      // the previous snapshot is dead once the probe has read it — free
-      // its blocks now instead of waiting for driver GC
-      if (prevState != null) unpersistCheckpoint(prevState)
-      prevState = state
-      state = next
-    }
-    if (prevState != null) unpersistCheckpoint(prevState)
-    if (!converged)
-      System.err.println(
-        s"[graft] propagateMinLabels: hit maxIterations=$maxIterations " +
-          "before label fixpoint — some duplicate chains may be split " +
-          "into multiple clusters")
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[graft] propagateMinLabels: rounds=$round")
-    // after the final id-window every row of an id carries its label;
-    // the per-id collapse rides the id exchange the checkpoint
-    // preserved (LogicalRDD keeps outputPartitioning)
-    labelsOf(state)
-  }
+  /** Distinct word tokens of each doc as 64-bit HASH keys, one row per
+    * (doc_id, tok). The token is an internal join/aggregation key
+    * (never output), so an 8-byte long through the df aggregation +
+    * anti-join + inverted-index self-join beats the string on every
+    * pass; distinct-per-doc runs on the hashed array (cheaper
+    * compares). Collision budget — stated precisely because the
+    * consumers' OUTPUTS are counts, so the family is PROBABILISTICALLY
+    * exact, not exact, at corpus scale: with T distinct tokens the
+    * expected colliding token pairs are ~T²/2^65 (birthday) — at the
+    * 100 TB design point of T ~ 10^12 that is ~3·10^4 collided pairs
+    * among 10^12 tokens, i.e. a relative count perturbation of order
+    * 10^-8 on any aggregate a pipeline reads, and the affected pairs
+    * inflate n_inter by AT MOST 1 each. The l1c/l28/l23 oracles
+    * recompute with STRING tokens and stay hash-exact on the gated data
+    * (certifying zero collisions there). Exactness-critical audits can
+    * swap the key for a 128-bit struct(xxhash64(t), xxhash64(t, seed2))
+    * — expected collisions ~10^-15 at T = 10^12 — at the measured cost
+    * of doubling key bytes through every exchange; 64-bit is the
+    * shipped default because a 10^-8 count perturbation is far below
+    * the sampling noise of any decision these counts feed. */
+  private def hashedTokens(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol).as("doc_id"),
+      explode(array_distinct(
+        transform(split(col(textCol), " "), t => xxhash64(t)))).as("tok"))
 
-  /** Exact token-set Jaccard similarity pairs via the inverted-index
-    * plan: explode distinct tokens, self-join on the token, count
-    * intersections, derive Jaccard from |A|+|B|-|A∩B|. Never a cross
-    * product — cost is Σ df(tok)² over tokens, which is why the
-    * document-frequency cap matters: at corpus scale, stopword-grade
-    * tokens ("the" in ~every doc) each contribute a quadratic hot
-    * bucket on the join key while carrying ~zero Jaccard signal.
-    * Tokens with df > maxDfRatio × n_docs are dropped BEFORE the
-    * self-join via a broadcast anti-join (the hot list is tiny by
-    * construction: at most Σtokens/(ratio·n_docs) entries), and sizes
-    * are computed over the surviving tokens so the Jaccard stays
-    * internally consistent — the declared semantic is "Jaccard over
-    * informative tokens", mirrored exactly in the l1c oracle SQL.
+  /** Token-set overlap of every doc pair sharing an informative token,
+    * via the inverted-index plan: self-join [[hashedTokens]] on the
+    * token and count intersections. Never a cross product — cost is
+    * Σ df(tok)² over tokens, which is why the document-frequency cap
+    * matters: at corpus scale, stopword-grade tokens ("the" in ~every
+    * doc) each contribute a quadratic hot bucket on the join key while
+    * carrying ~zero overlap signal. Tokens with df > maxDfRatio × n_docs
+    * are dropped BEFORE the self-join via a broadcast anti-join (the
+    * hot list is tiny by construction: at most Σtokens/(ratio·n_docs)
+    * entries), and set sizes are computed over the surviving tokens so
+    * every ratio derived from them stays internally consistent.
     *
-    * Output: (d1, d2, n_inter, jpm) with jpm = Jaccard per-mille
-    * (integer-div, float-free for oracle stability), filtered to
-    * jpm >= minJpm and d1 < d2. */
-  def jaccardPairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      minJpm: Int = 500,
-      maxDfRatio: Double = 0.9): DataFrame = {
-    // tokens travel as 64-bit HASH keys from the start: the token is an
-    // internal join/aggregation key (never output), so an 8-byte long
-    // through the df aggregation + anti-join + inverted-index self-join
-    // beats the string on every pass; distinct-per-doc runs on the
-    // hashed array (cheaper compares). Collision budget — stated
-    // precisely because this operator's OUTPUT is a count, so the
-    // family is PROBABILISTICALLY exact, not exact, at corpus scale:
-    // with T distinct tokens the expected colliding token pairs are
-    // ~T²/2^65 (birthday) — at the 100 TB design point of T ~ 10^12
-    // that is ~3·10^4 collided pairs among 10^12 tokens, i.e. a
-    // relative count perturbation of order 10^-8 on any aggregate a
-    // pipeline reads, and the affected pairs inflate n_inter by AT MOST
-    // 1 each. The l1c/l28 oracles recompute with STRING tokens and stay
-    // hash-exact on the gated data (certifying zero collisions there).
-    // Exactness-critical audits can swap the key for a 128-bit
-    // struct(xxhash64(t), xxhash64(t, seed2)) — expected collisions
-    // ~10^-15 at T = 10^12 — at the measured cost of doubling key
-    // bytes through every exchange; 64-bit is the shipped default
-    // because a 10^-8 count perturbation is far below the sampling
-    // noise of any decision these counts feed.
-    val toks = df
-      .select(col(idCol).as("doc_id"),
-        explode(array_distinct(
-          transform(split(col(textCol), " "), t => xxhash64(t)))).as("tok"))
+    * Output: (d1, d2, n_inter, n1, n2) with d1 < d2. */
+  private def tokenOverlap(
+      df: DataFrame, idCol: String, textCol: String, maxDfRatio: Double): DataFrame = {
+    val toks = hashedTokens(df, idCol, textCol)
     val nDocs = toks.agg(countDistinct(col("doc_id")).as("n_docs"))
     // toks is distinct per (doc, tok), so count(*) per tok IS document
     // frequency; the hot list stays small enough to broadcast whenever
@@ -358,56 +220,48 @@ object Dedup {
     val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_tok"))
     val a = kept.select(col("doc_id").as("d1"), col("tok"))
     val b = kept.select(col("doc_id").as("d2"), col("tok"))
-    val inter = a.join(b, Seq("tok")).filter(col("d1") < col("d2"))
+    a.join(b, Seq("tok")).filter(col("d1") < col("d2"))
       .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("n_inter"))
-    inter
       .join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("n_tok", "n1"), "d1")
       .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("n_tok", "n2"), "d2")
+  }
+
+  /** Exact token-set Jaccard similarity pairs over [[tokenOverlap]]:
+    * Jaccard from |A|+|B|-|A∩B|. The declared semantic is "Jaccard over
+    * informative tokens" (the df cap), mirrored exactly in the l1c
+    * oracle SQL.
+    *
+    * Output: (d1, d2, n_inter, jpm) with jpm = Jaccard per-mille
+    * (integer-div, float-free for oracle stability), filtered to
+    * jpm >= minJpm and d1 < d2. */
+  def jaccardPairs(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      minJpm: Int = 500,
+      maxDfRatio: Double = 0.9): DataFrame =
+    tokenOverlap(df, idCol, textCol, maxDfRatio)
       .withColumn("jpm", expr("(n_inter * 1000) div (n1 + n2 - n_inter)"))
       .filter(col("jpm") >= minJpm)
       .select(col("d1"), col("d2"), col("n_inter"), col("jpm"))
-  }
 
   /** Asymmetric token-set containment pairs: for each candidate pair,
     * cpm = |A∩B| / min(|A|,|B|) in per-mille — the "near-superset"
     * detector. Jaccard misses the classic boilerplate case (a short
     * doc wholly embedded in a long one scores |A|/|B| ≈ 0 Jaccard but
     * 1000 cpm); dedup policies usually drop the contained side.
-    * Same inverted-index + df-cap plan as [[jaccardPairs]]: hot
-    * (stopword-grade) tokens are dropped before the self-join because
-    * they carry ~zero set-overlap signal and would make the token key
-    * quadratic at corpus scale. Integer per-mille division on both
-    * engines — oracle-hashable. */
+    * Same [[tokenOverlap]] plan and df cap as [[jaccardPairs]].
+    * Integer per-mille division on both engines — oracle-hashable. */
   def containmentPairs(
       df: DataFrame,
       idCol: String,
       textCol: String,
       minCpm: Int = 800,
-      maxDfRatio: Double = 0.9): DataFrame = {
-    // 64-bit hashed token keys (the jaccardPairs rationale): internal
-    // keys only, oracle-certified collision-free on gated data
-    val toks = df
-      .select(col(idCol).as("doc_id"),
-        explode(array_distinct(
-          transform(split(col(textCol), " "), t => xxhash64(t)))).as("tok"))
-    val nDocs = toks.agg(countDistinct(col("doc_id")).as("n_docs"))
-    val hot = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(nDocs))
-      .filter(col("df") > lit(maxDfRatio) * col("n_docs"))
-      .select(col("tok"))
-    val kept = toks.join(broadcast(hot), Seq("tok"), "left_anti")
-    val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_tok"))
-    val a = kept.select(col("doc_id").as("d1"), col("tok"))
-    val b = kept.select(col("doc_id").as("d2"), col("tok"))
-    val inter = a.join(b, Seq("tok")).filter(col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("n_tok", "n1"), "d1")
-      .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("n_tok", "n2"), "d2")
+      maxDfRatio: Double = 0.9): DataFrame =
+    tokenOverlap(df, idCol, textCol, maxDfRatio)
       .withColumn("cpm", expr("(n_inter * 1000) div least(n1, n2)"))
       .filter(col("cpm") >= minCpm)
       .select(col("d1"), col("d2"), col("n_inter"), col("cpm"))
-  }
 
   /** Distinct word n-grams of `textCol` as 64-BIT HASH KEYS, one row
     * per (id, gram). Every consumer (dup-fraction, cross-source
@@ -422,7 +276,7 @@ object Dedup {
     * string grams — the oracle gate therefore also certifies that no
     * 64-bit gram collision occurs on the certified data. Consumers
     * whose outputs are COUNTS are thereby probabilistically exact at
-    * corpus scale — see the quantified budget in [[jaccardPairs]]
+    * corpus scale — see the quantified budget in [[hashedTokens]]
     * (~G²/2^65 collided gram pairs, order-10^-8 count perturbation at
     * G ~ 10^12; two-seed 128-bit struct keys are the substitution when
     * that matters). The
@@ -1057,30 +911,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Blocked edit-distance (Levenshtein) near-dup pairs — the
-    * record-linkage classic, shaped for scale:
-    *
-    *   1. BLOCK: rows join only within (text prefix, length band)
-    *     blocks. Levenshtein is O(len²) per pair, so an unblocked
-    *     self-join is doubly quadratic (pairs × cell grid) — the block
-    *     key turns Σn² over blocks into the cost, exactly the inverted-
-    *     index argument from [[jaccardPairs]]. The declared semantic is
-    *     therefore "near-dups that agree on the first `prefixLen` chars
-    *     and land in the same `lenBand`-char length band" — edits inside
-    *     the prefix or across a band boundary are out of contract (use
-    *     [[minHashLshPairs]] when edits can fall anywhere).
-    *   2. BOUND: distance is computed over the first `sigLen` chars
-    *     only, capping the DP grid at sigLen² regardless of document
-    *     length (full-text Levenshtein on book-sized rows is never
-    *     viable at corpus scale, and near-dup signal concentrates in
-    *     the head).
-    *   3. THRESHOLD: Spark's banded `levenshtein(l, r, k)` stops the DP
-    *     early once distance provably exceeds `maxDist` (returns -1),
-    *     so hopeless pairs cost O(k·sigLen), not O(sigLen²).
-    *
-    * Output: (d1, d2, dist) with d1 < d2 and dist ≤ maxDist. Exactly
-    * mirrored by portable SQL (`levenshtein` + the same block key), so
-    * the l14 oracle hash-verifies this operator. */
   /** Connected components over a bipartite (node, key) incidence list:
     * nodes sharing any key are connected. Keys can be LSH buckets,
     * content digests, shared n-grams, blocking keys — anything that
@@ -1093,11 +923,11 @@ object Dedup {
     * Beyond", SoCC'14 — public algorithm) contract the doc graph to
     * one star per component rooted at the component min. Star rounds
     * converge in O(log² n) INDEPENDENT of id placement along dup
-    * chains — plain min-label propagation ([[propagateMinLabels]], kept
-    * for the hub-shaped LSH-bucket graphs where it converges in 1–2
-    * rounds) degrades to Ω(eccentricity) rounds on chained dup families
-    * because knowledge of the true min spreads one hop per round
-    * (measured: 16 rounds vs 6 on the l25 4-gram graph).
+    * chains — plain min-label propagation degrades to Ω(eccentricity)
+    * rounds on chained dup families because knowledge of the true min
+    * spreads one hop per round (measured: 16 rounds vs 6 on the l25
+    * 4-gram graph). Every graft component query (l25's n-gram families,
+    * l1g's LSH clusters) runs through this one implementation.
     *
     * Output: (id, label) — label = min node id of the component. */
   def componentsByKey(
@@ -1277,9 +1107,6 @@ object Dedup {
       System.err.println(
         s"[graft] componentsByKey: hit maxIterations=$maxIterations " +
           "before the star fixpoint — some families may be split")
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[graft] componentsByKey: star rounds=$round" +
-        s" localFinish=${localDone.isDefined}")
     // at the fixpoint every edge is (child, componentMin); nodes absent
     // from the edge set are singletons labeled by themselves. inc stays
     // persisted — the returned plan still reads it (freed by the
@@ -1329,10 +1156,7 @@ object Dedup {
     // verify stage compares the same hashed sets on both sides (the
     // l23 oracle is the full quadratic STRING-token join, so the gate
     // certifies end-to-end equality)
-    val toks = df
-      .select(col(idCol).as("doc_id"),
-        explode(array_distinct(
-          transform(split(col(textCol), " "), t => xxhash64(t)))).as("tok"))
+    val toks = hashedTokens(df, idCol, textCol)
     val cand = ppjoinCandidates(toks, minJpm)
     val sets = toks.groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("tok"))).as("tokset"),
@@ -1373,6 +1197,30 @@ object Dedup {
       .select(col("d1"), col("d2")).distinct()
   }
 
+  /** Blocked edit-distance (Levenshtein) near-dup pairs — the
+    * record-linkage classic, shaped for scale:
+    *
+    *   1. BLOCK: rows join only within (text prefix, length band)
+    *     blocks. Levenshtein is O(len²) per pair, so an unblocked
+    *     self-join is doubly quadratic (pairs × cell grid) — the block
+    *     key turns Σn² over blocks into the cost, exactly the inverted-
+    *     index argument from [[jaccardPairs]]. The declared semantic is
+    *     therefore "near-dups that agree on the first `prefixLen` chars
+    *     and land in the same `lenBand`-char length band" — edits inside
+    *     the prefix or across a band boundary are out of contract (use
+    *     [[minHashLshPairs]] when edits can fall anywhere).
+    *   2. BOUND: distance is computed over the first `sigLen` chars
+    *     only, capping the DP grid at sigLen² regardless of document
+    *     length (full-text Levenshtein on book-sized rows is never
+    *     viable at corpus scale, and near-dup signal concentrates in
+    *     the head).
+    *   3. THRESHOLD: Spark's banded `levenshtein(l, r, k)` stops the DP
+    *     early once distance provably exceeds `maxDist` (returns -1),
+    *     so hopeless pairs cost O(k·sigLen), not O(sigLen²).
+    *
+    * Output: (d1, d2, dist) with d1 < d2 and dist ≤ maxDist. Exactly
+    * mirrored by portable SQL (`levenshtein` + the same block key), so
+    * the l14 oracle hash-verifies this operator. */
   def editDistancePairs(
       df: DataFrame,
       idCol: String,

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * the edge list is localCheckpointed once and reused every round
   * instead of recomputing its upstream plan, and each round's rank
   * snapshot frees the previous round's blocks (same discipline as
-  * [[Dedup.propagateMinLabels]]).
+  * [[Dedup.componentsByKey]]).
   */
 object Graph {
 

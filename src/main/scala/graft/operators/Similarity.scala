@@ -47,21 +47,18 @@ object Similarity {
       corpus: DataFrame,
       k: Int,
       idCol: String,
-      vecCol: String,
-      useNativeExpr: Boolean = true): DataFrame = {
+      vecCol: String): DataFrame = {
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
     // r14: the O(|q|·|c|·dim) score loop runs in the corpus scan's
     // tasks (row-group-bounded to 2 at sf10) — spread it; gated no-op
     // at sf0.1 / cluster scale
     val c = Spread.ifNarrow(
       corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec")), col("n_id"))
-    // native codegen'd expression by default (bit-identical to the HOF
-    // composition, ~no per-element lambda dispatch in the O(|q|·|c|·dim)
-    // hot loop); HOF kept as the cross-check path.
+    // native codegen'd cosine: bit-identical to the [[cosine]] HOF
+    // composition (NativeExprSpec), with no per-element lambda dispatch
+    // in the O(|q|·|c|·dim) hot loop
     val simExpr =
-      if (useNativeExpr)
-        graft.GraftFunctions.cosineNative(queries.sparkSession, col("q_vec"), col("n_vec"))
-      else cosine(col("q_vec"), col("n_vec"))
+      graft.GraftFunctions.cosineNative(queries.sparkSession, col("q_vec"), col("n_vec"))
     // r13 (verdict #7): EXACT bounded top-k via the graft.functions
     // TopKBySim aggregate instead of a per-query ranking window. The
     // window formulation exchanged and sorted the whole |q|·|c| score
@@ -376,6 +373,37 @@ object Similarity {
         coalesce(col("sse"), lit(0.0)).as("sse"))
   }
 
+  /** The first `k` non-null vectors by id as driver-side (id, vector)
+    * seeds — the centroid set [[semDedup]] and [[semDedupAnn]] inline
+    * as plan literals (k rows, dimension-sized). */
+  private def firstSeeds(vecs: DataFrame, k: Int): Array[(Long, Array[Double])] =
+    vecs
+      .orderBy(col("id").asc_nulls_first)
+      .limit(k)
+      .collect()
+      .map(r => (r.getAs[Number](0).longValue,
+        r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue).toArray))
+
+  /** The SemDeDup within-cluster drop rule shared by every assignment
+    * variant: over (id, cluster, v), x drops iff an earlier (lower-id)
+    * cluster-mate has 6-dp rounded cosine ≥ tau — ONE cluster-keyed
+    * self-join. Output: (id, cluster, status ∈ {kept, dropped}). */
+  private def withinClusterDrops(assigned: DataFrame, tau: Double): DataFrame = {
+    val dropped = assigned.as("x")
+      .join(assigned.as("y"),
+        col("x.cluster") === col("y.cluster") &&
+          col("y.id") < col("x.id") &&
+          round(graft.GraftFunctions.cosineNative(
+            assigned.sparkSession, col("x.v"), col("y.v")), 6) >= tau,
+        "left_semi")
+      .select(col("id"), lit(true).as("__dup"))
+    assigned.select(col("id"), col("cluster"))
+      .join(dropped, Seq("id"), "left")
+      .select(col("id"), col("cluster"),
+        when(col("__dup"), lit("dropped")).otherwise(lit("kept"))
+          .as("status"))
+  }
+
   /** SemDeDup-style semantic (embedding-space) deduplication (Abbas et
     * al., arXiv:2303.09540 — public method): cluster the corpus in
     * embedding space, then within each cluster drop every vector that
@@ -413,12 +441,7 @@ object Similarity {
     val vecs = corpus
       .select(col(idCol).as("id"), col(vecCol).as("v"))
       .filter(col("v").isNotNull)
-    val seeds: Array[(Long, Array[Double])] = vecs
-      .orderBy(col("id").asc_nulls_first)
-      .limit(k)
-      .collect()
-      .map(r => (r.getAs[Number](0).longValue,
-        r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue).toArray))
+    val seeds = firstSeeds(vecs, k)
     if (seeds.isEmpty) // empty slice: nothing to dedup, keep the schema
       return vecs.select(col("id"), lit(-1L).as("cluster"),
         lit("kept").as("status")).limit(0)
@@ -444,19 +467,7 @@ object Similarity {
               .cast("int")),
           lit(seeds.map(_._1).min)))
       .select(col("id"), col("cluster"), col("v"))
-    val dropped = assigned.as("x")
-      .join(assigned.as("y"),
-        col("x.cluster") === col("y.cluster") &&
-          col("y.id") < col("x.id") &&
-          round(graft.GraftFunctions.cosineNative(
-            spark, col("x.v"), col("y.v")), 6) >= tau,
-        "left_semi")
-      .select(col("id"), lit(true).as("__dup"))
-    assigned.select(col("id"), col("cluster"))
-      .join(dropped, Seq("id"), "left")
-      .select(col("id"), col("cluster"),
-        when(col("__dup"), lit("dropped")).otherwise(lit("kept"))
-          .as("status"))
+    withinClusterDrops(assigned, tau)
   }
 
   /** IVF-assisted [[semDedup]] — the 100 TB assignment path.
@@ -504,12 +515,7 @@ object Similarity {
     val vecs = corpus
       .select(col(idCol).as("id"), col(vecCol).as("v"))
       .filter(col("v").isNotNull)
-    val seeds: Array[(Long, Array[Double])] = vecs
-      .orderBy(col("id").asc_nulls_first)
-      .limit(k)
-      .collect()
-      .map(r => (r.getAs[Number](0).longValue,
-        r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue).toArray))
+    val seeds = firstSeeds(vecs, k)
     if (seeds.isEmpty)
       return vecs.select(col("id"), lit(-1L).as("cluster"),
         lit("kept").as("status")).limit(0)
@@ -599,19 +605,7 @@ object Similarity {
           lit(minCid)))
       .select(col("id"), col("cluster"), col("v"))
       .localCheckpoint(false)
-    val dropped = assigned.as("x")
-      .join(assigned.as("y"),
-        col("x.cluster") === col("y.cluster") &&
-          col("y.id") < col("x.id") &&
-          round(graft.GraftFunctions.cosineNative(
-            spark, col("x.v"), col("y.v")), 6) >= tau,
-        "left_semi")
-      .select(col("id"), lit(true).as("__dup"))
-    assigned.select(col("id"), col("cluster"))
-      .join(dropped, Seq("id"), "left")
-      .select(col("id"), col("cluster"),
-        when(col("__dup"), lit("dropped")).otherwise(lit("kept"))
-          .as("status"))
+    withinClusterDrops(assigned, tau)
   }
 
   /** [[semDedup]] at the paper's OWN scaling prescription, end-to-end
@@ -664,29 +658,14 @@ object Similarity {
       tau: Double,
       targetClusterSize: Int = 128,
       minK: Int = 8,
-      nProbe: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
+      nProbe: Int = 2): DataFrame =
     semDedupScaledAssigned(corpus, idCol, vecCol,
       targetClusterSize, minK, nProbe) match {
       case None =>
         corpus.select(col(idCol).as("id"), lit(-1L).as("cluster"),
           lit("kept").as("status")).limit(0)
-      case Some(assigned) =>
-        val dropped = assigned.as("x")
-          .join(assigned.as("y"),
-            col("x.cluster") === col("y.cluster") &&
-              col("y.id") < col("x.id") &&
-              round(graft.GraftFunctions.cosineNative(
-                spark, col("x.v"), col("y.v")), 6) >= tau,
-            "left_semi")
-          .select(col("id"), lit(true).as("__dup"))
-        assigned.select(col("id"), col("cluster"))
-          .join(dropped, Seq("id"), "left")
-          .select(col("id"), col("cluster"),
-            when(col("__dup"), lit("dropped")).otherwise(lit("kept"))
-              .as("status"))
+      case Some(assigned) => withinClusterDrops(assigned, tau)
     }
-  }
 
   /** The assignment stage of [[semDedupScaled]] — (id, cluster, v),
     * lazily checkpointed (three consumers replay the O(n·√k·dim) probe

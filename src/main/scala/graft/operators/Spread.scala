@@ -18,41 +18,31 @@ import org.apache.spark.sql.{Column, DataFrame}
   * sub-second kernel work it parallelizes (r13 measured the barrier
   * cohort 5.2 → 3.0 s by removing it).
   *
-  * So the spread is gated twice:
+  * So the spread is gated twice, and fires only when both gates fail:
+  *   - estimated input bytes < 8 MiB → no-op (the sf0.1 regime:
+  *     fixed shuffle cost dominates; 8 MiB sits between sf0.1's
+  *     largest gated input, events at 2.0 MB, and sf10's smallest
+  *     serialized one, embeddings at 52 MB). Checked FIRST: the
+  *     estimate comes off the optimized plan's statistics, so a small
+  *     input starts no physical planning at define time;
   *   - splits >= defaultParallelism → no-op (a real warehouse scan is
   *     already parallel; this gate alone makes the op a no-op at
   *     cluster scale, where shuffling payload bytes for "parallelism"
-  *     is exactly what guide §2.3 forbids);
-  *   - estimated input bytes < minBytes → no-op (the sf0.1 regime:
-  *     fixed shuffle cost dominates; 8 MiB sits between sf0.1's
-  *     largest gated input, events at 2.0 MB, and sf10's smallest
-  *     serialized one, embeddings at 52 MB).
+  *     is exactly what guide §2.3 forbids). `df.rdd.getNumPartitions`
+  *     plans the scan, so it runs only past the byte gate.
   *
   * The repartition hashes on the caller's unique id — deterministic
   * under retry (guide §2.5: never round-robin non-deterministic input;
   * ids are unique so the hash spreads evenly) and free of round-robin's
   * sort-before-repartition.
-  *
-  * minBytes is overridable per call site and via
-  * `graft.spread.minBytes` in the Spark conf (a deployment that wants
-  * the spread off entirely sets it to Long.MaxValue).
   */
 object Spread {
-  val defaultMinBytes: Long = 8L << 20
+  private val minBytes = BigInt(8L << 20)
 
-  private[graft] def ifNarrow(
-      df: DataFrame,
-      key: Column,
-      minBytes: Long = defaultMinBytes): DataFrame = {
-    val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df
-    else {
-      val floor = BigInt(
-        spark.conf.get("graft.spread.minBytes", minBytes.toString))
-      // plan-time estimate (file bytes scaled by pruning) — no job runs
-      if (df.queryExecution.optimizedPlan.stats.sizeInBytes < floor) df
-      else df.repartition(target, key)
-    }
+  private[graft] def ifNarrow(df: DataFrame, key: Column): DataFrame = {
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < minBytes ||
+        df.rdd.getNumPartitions >= target) df
+    else df.repartition(target, key)
   }
 }

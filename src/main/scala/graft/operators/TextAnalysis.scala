@@ -575,54 +575,29 @@ object TextAnalysis {
   }
 
   /** Apply a learned BPE merge sequence to a corpus — the tokenizer
-    * APPLICATION side of [[bpeMerges]]. Each document becomes one
-    * U+0001-separated symbol string (a separator between every
-    * character, so inter-word spaces are ordinary symbols that no merge
-    * pair can ever contain — merges were learned on space-split words —
-    * making cross-word merges structurally impossible), and the merges
-    * replay IN LEARNED ORDER as chained codegen'd regexp_replace
-    * passes, each with the same lookahead greedy-adjacency semantics
-    * the trainer used. Scan-linear: |merges| regex passes over the
-    * text, no shuffle, no UDF.
+    * APPLICATION side of [[bpeMerges]]. graft_bpe_token_count
+    * ([[graft.functions.BpeTokenCount]]) counts each document's tokens
+    * with the priority algorithm: per space-split word, repeatedly merge
+    * the lowest-rank pair present, leftmost first. That costs
+    * O(word_len · log word_len) per word INDEPENDENT of |merges|, where
+    * a sequential replay pays one full-text pass PER MERGE (fine at 8,
+    * hopeless at a 50k vocabulary). Equivalence with the sequential
+    * replay for trained tables is pinned in BpeApplySpec. Scan-linear,
+    * no shuffle.
     *
-    * Output: (id, n_chars, n_bpe_tokens, bytes_per_token_micro) —
-    * token count in closed form (symbols minus the space symbols), the
-    * compression ratio floor-scaled to micro units. */
+    * Output: (id, n_chars, n_bpe_tokens, chars_per_token_micro) — the
+    * compression ratio floor-scaled to micro units over the non-space
+    * characters. */
   def applyBpeMerges(
       df: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)],
-      useNativeExpr: Boolean = true): DataFrame = {
-    // NATIVE path (default): graft_bpe_token_count applies the merges
-    // with the priority algorithm — O(word_len²) per word INDEPENDENT
-    // of |merges|, where the regex chain below pays one full-text regex
-    // pass PER MERGE (fine at 8, hopeless at a 50k vocabulary).
-    // Equivalence for trained tables pinned in BpeApplySpec; the regex
-    // chain stays as the cross-check path.
-    if (useNativeExpr) {
-      val nChars = length(col(textCol))
-      val nSpaces = nChars - length(regexp_replace(col(textCol), " ", ""))
-      val nTokens = graft.GraftFunctions.bpeTokenCountNative(
-        df.sparkSession, col(textCol), merges)
-      return df.filter(col(textCol).isNotNull && col(textCol) =!= "")
-        .select(col(idCol).as("id"), nChars.as("n_chars"),
-          nTokens.as("n_bpe_tokens"),
-          floor((nChars - nSpaces).cast("double") * 1e6 /
-            greatest(nTokens, lit(1))).cast("long").as("chars_per_token_micro"))
-    }
-    val sep = "\u0001"
-    val base = concat(lit(sep), array_join(split(col(textCol), ""), sep), lit(sep))
-    val merged = merges.foldLeft(base) { case (acc, (l, r)) =>
-      regexp_replace(acc,
-        java.util.regex.Pattern.quote(s"$sep$l$sep$r") +
-          s"(?=${java.util.regex.Pattern.quote(sep)})",
-        java.util.regex.Matcher.quoteReplacement(s"$sep$l$r"))
-    }
+      merges: Seq[(String, String)]): DataFrame = {
     val nChars = length(col(textCol))
     val nSpaces = nChars - length(regexp_replace(col(textCol), " ", ""))
-    val nTokens = (size(split(merged, sep)) - 2) - nSpaces
+    val nTokens = graft.GraftFunctions.bpeTokenCountNative(
+      df.sparkSession, col(textCol), merges)
     df.filter(col(textCol).isNotNull && col(textCol) =!= "")
       .select(col(idCol).as("id"), nChars.as("n_chars"),
-        nTokens.cast("long").as("n_bpe_tokens"),
+        nTokens.as("n_bpe_tokens"),
         floor((nChars - nSpaces).cast("double") * 1e6 /
           greatest(nTokens, lit(1))).cast("long").as("chars_per_token_micro"))
   }

@@ -15,8 +15,9 @@ import graft.sources.ParquetIO
   * `Rule[LogicalPlan]` instead of a wrapper API.
   *
   * Fires on parquet `LogicalRelation`s carrying a `corruptDateRebase`
-  * read option: runs the same per-footer DRILL-4203 verdict as
-  * [[ParquetIO.readCorruptDateAware]] and, when shifting is needed,
+  * read option ([[ParquetIO.readCorruptDateAware]] sets it): runs the
+  * per-footer DRILL-4203 verdict [[ParquetIO.rebaseNeeded]] and, when
+  * shifting is needed,
   * wraps the relation in a Project that `date_sub`s every DATE column,
   * re-using each attribute's exprId so references above stay valid.
   * The option is stripped from the rewritten relation, making the rule

@@ -584,7 +584,7 @@ object TextOps extends QGroup {
     // the corpus and report per-doc token counts + compression. The
     // merge table is vocabulary-derived and tiny (8 rows, a bounded
     // stat like kmeans centroids), so it rides the plan as literals;
-    // the application itself is |merges| codegen'd regex passes over
+    // the application itself is one graft_bpe_token_count pass over
     // one scan — no shuffle, no UDF. BpeApplySpec pins the classic
     // low/lower/newest tokenization and the train->apply round trip.
     QDef("l35b_bpe_tokenize",
@@ -593,8 +593,8 @@ object TextOps extends QGroup {
         val merges = TextAnalysis.bpeMerges(docs, "text", nMerges = 8)
           .collect().sortBy(_.getInt(0))
           .map(r => (r.getString(1), r.getString(2))).toSeq
-        // r14: |merges| regex passes per doc, scan-linear — Spread
-        // class (see l8); the merge-training aggs above keep the scan
+        // r14: a per-doc text kernel, scan-linear — Spread class
+        // (see l8); the merge-training aggs above keep the scan
         TextAnalysis.applyBpeMerges(
           graft.operators.Spread.ifNarrow(docs, col("doc_id")),
           "doc_id", "text", merges)

@@ -5,7 +5,7 @@ import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, DateType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -184,28 +184,17 @@ object ParquetIO {
     *    unclear (reference: META_UNCLEAR_TEST_VALUES, java:224) and the
     *    actual column values of that file are probed with a scan —
     *    missing stats must not silently pass as "sane".
-    * The fix itself is a conditional `date_sub` projection — scan-speed,
-    * no shuffle. Every part footer is sniffed in auto mode; a directory
-    * mixing corrupt and sane writers is rejected loudly. */
+    * The read goes through [[graft.plans.CorruptDateRebaseRule]]: the
+    * rule rebases DATA date columns only (partition DATE columns come
+    * from directory names) with a conditional `date_sub` projection —
+    * scan-speed, no shuffle. Every part footer is sniffed in auto mode;
+    * a directory mixing corrupt and sane writers is rejected loudly. */
   def readCorruptDateAware(
       spark: SparkSession,
       path: String,
       corruptDateRebase: String = "auto"): DataFrame = {
-    val df = spark.read.parquet(path)
-    // only DATA columns can carry DRILL-4203 corruption — partition
-    // DATE columns come from directory names, never from the shifted
-    // file encodings, and must not be rebased
-    val physical = ParquetMeta.footer(path, spark.sessionState.newHadoopConf())
-      .getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
-    val dateCols = df.schema.fields
-      .filter(f => f.dataType == DateType && physical.contains(f.name))
-      .map(_.name)
-    if (dateCols.isEmpty || corruptDateRebase == "off") return df
-
-    val needsFix = rebaseNeeded(spark, Seq(path), dateCols.toSet, corruptDateRebase)
-    if (!needsFix) df
-    else dateCols.foldLeft(df)((d, c) =>
-      d.withColumn(c, date_sub(col(s"`$c`"), CorrectCorruptDateShiftDays)))
+    graft.GraftFunctions.ensureRegistered(spark)
+    spark.read.option("corruptDateRebase", corruptDateRebase).parquet(path)
   }
 
   /** Verdict cache for [[rebaseNeeded]] — the optimizer rule re-runs on
@@ -220,9 +209,10 @@ object ParquetIO {
   def clearRebaseCache(): Unit = rebaseVerdicts.clear()
 
   /** Shared verdict for a read: does `mode` require shifting DATE
-    * columns for the part files under `paths`? Used by both
-    * [[readCorruptDateAware]] and the transparent
-    * [[graft.plans.CorruptDateRebaseRule]] optimizer rule. */
+    * columns for the part files under `paths`? Used by the
+    * [[graft.plans.CorruptDateRebaseRule]] optimizer rule, which every
+    * `corruptDateRebase` read ([[readCorruptDateAware]] included) runs
+    * through. */
   def rebaseNeeded(
       spark: SparkSession,
       paths: Seq[String],

@@ -47,17 +47,47 @@ class EngineSpec extends SparkSpec {
       .head().getDouble(0) == 1.0)
   }
 
-  test("src/main and src/test hold exactly one session builder call") {
-    val builder = """\bSparkSession\s*\.\s*builder\b""".r
-    val hits = Seq("src/main", "src/test").flatMap { root =>
+  private def scalaFiles(roots: String*): Seq[java.nio.file.Path] =
+    roots.flatMap { root =>
       val dir = Paths.get(root)
       assert(Files.isDirectory(dir), s"run from the repo root: $root missing")
       val files = Files.walk(dir)
       try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally files.close()
-    }.flatMap { p =>
+    }
+
+  test("src/main and src/test hold exactly one session builder call") {
+    val builder = """\bSparkSession\s*\.\s*builder\b""".r
+    val hits = scalaFiles("src/main", "src/test").flatMap { p =>
       builder.findAllIn(Files.readString(p)).map(_ => p.toString).toList
     }
     assert(hits == Seq("src/main/scala/graft/Engine.scala"), hits)
+  }
+
+  test("src/main reads exactly the pinned environment variables, properties and graft confs") {
+    // every read is `<file>:<key>`; a read without a literal key shows
+    // as `<file>:?`. Adding a knob means editing this list.
+    val read = """\b(?:sys\.(?:env|props)|System\.(?:getenv|getProperty))\b(?:\.\w+)?(?:\(\s*"([^"]*)")?""".r
+    val conf = """\bconf\.get\w*\(\s*"(graft\.[^"]*)"""".r
+    val hits = scalaFiles("src/main").flatMap { p =>
+      val src = Files.readString(p)
+      val file = p.getFileName.toString
+      (read.findAllMatchIn(src).map(m => Option(m.group(1)).getOrElse("?")) ++
+        conf.findAllMatchIn(src).map(_.group(1))).map(k => s"$file:$k").toList
+    }.sorted
+    val pinned = Seq(
+      "Bench.scala:SPARK_GRAFT_BASELINE",
+      "Bench.scala:SPARK_GRAFT_BENCH_ONLY",
+      "Bench.scala:SPARK_GRAFT_BENCH_REPS",
+      "Bench.scala:SPARK_GRAFT_BENCH_SKIP",
+      "Bench.scala:SPARK_GRAFT_BENCH_WARMUP",
+      "Bench.scala:SPARK_GRAFT_SF_DIR",
+      "Engine.scala:SPARK_GRAFT_CPUS",
+      "PlanDirDump.scala:SPARK_GRAFT_SF_DIR",
+      "RangeFrame.scala:graft.rangeframe.decomposeOverBytes",
+      "TextOps.scala:graft.l36.broadcastVocabMax",
+      "Verify.scala:SPARK_GRAFT_VERIFY_ONLY",
+      "Verify.scala:SPARK_GRAFT_VERIFY_SKIP")
+    assert(hits == pinned, hits.mkString("\n"))
   }
 }

@@ -63,40 +63,6 @@ class FixpointPropertySpec extends SparkSpec {
     }
   }
 
-  test("propagateMinLabels reaches the component-min fixpoint on random bipartite graphs") {
-    // the window-min rewrite must still converge to exactly the
-    // connected-component minimum for every id (same reference
-    // union-find as the star-contraction test)
-    val rnd = new scala.util.Random(0xD1CE)
-    for (trial <- 1 to 4) {
-      val nIds = 20 + rnd.nextInt(80)
-      val nKeys = 4 + rnd.nextInt(25)
-      val inc = (1 to 40 + rnd.nextInt(160)).map(_ =>
-        (rnd.nextInt(nIds).toLong, s"b${rnd.nextInt(nKeys)}")).distinct
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      inc.groupBy(_._2).values.foreach { ms =>
-        ms.map(_._1).sliding(2).foreach {
-          case Seq(a, b) =>
-            val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(ra) = rb
-          case _ => ()
-        }
-      }
-      val allIds = inc.map(_._1).distinct
-      val want = allIds.map(id => id ->
-        allIds.filter(o => find(o) == find(id)).min).toMap
-      val got = Dedup.propagateMinLabels(inc.toDF("id", "bucket"), 50)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == want, s"trial $trial diverged")
-    }
-  }
-
   test("RangeFrame decomposed == windowed on random integer values incl. negatives") {
     val rnd = new scala.util.Random(0xAB1E)
     for (trial <- 1 to 3) {

@@ -182,12 +182,23 @@ class DedupSpec extends SparkSpec {
       graft.GraftFunctions.minhashNative(spark,
         Dedup.shingleHashes(col("text")), 64).as("native"))
     assert(both.filter(col("hof") =!= col("native")).count() == 0)
-    // candidate pairs must also be identical end-to-end
-    val hofPairs = Dedup.minHashLshPairs(docs, "doc_id", "text", useNativeExpr = false)
+    // candidate pairs must also be identical end-to-end: the operator
+    // against the same banding pipeline built on the HOF compositions
+    val (numHashes, bands) = (64, 16) // the operator's defaults
+    val rows = numHashes / bands
+    val banded = docs.filter(col("text").isNotNull)
+      .select(col("doc_id").as("id"), Dedup.minHashSignatureFromHashes(
+        Dedup.shingleHashes(col("text")), numHashes).as("sig"))
+      .select(col("id"), posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
+        xxhash64(slice(col("sig"), b * rows + 1, lit(rows)), lit(42)))))
+    val hofPairs = banded.select(col("id").as("d1"), col("pos"), col("col"))
+      .join(banded.select(col("id").as("d2"), col("pos"), col("col")), Seq("pos", "col"))
+      .filter(col("d1") < col("d2"))
+      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("n_bands"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val natPairs = Dedup.minHashLshPairs(docs, "doc_id", "text", useNativeExpr = true)
+    val natPairs = Dedup.minHashLshPairs(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(hofPairs == natPairs)
+    assert(hofPairs.nonEmpty && hofPairs == natPairs)
   }
 
   test("native graft_shingle_hashes is bit-identical to the HOF composition") {
@@ -484,24 +495,6 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cl(10L) == 10L && cl(11L) == 11L, "null-text docs are singleton clusters")
     assert(cl.keySet == Set(1L, 2L, 3L, 4L, 10L, 11L), "every doc keeps a cluster row")
-  }
-
-  test("label propagation reaches fixpoint on long chains, not a fixed round count") {
-    // chain 1~2~…~8 through DISTINCT buckets: the min label travels one
-    // doc-hop per round, so any fixed small round count splits the
-    // cluster silently; the fixpoint loop must keep going until stable
-    val edges = (1L to 7L).flatMap(i => Seq((i, s"b$i"), (i + 1, s"b$i")))
-    val banded = edges.toDF("id", "bucket")
-    val labels = Dedup.propagateMinLabels(banded, maxIterations = 20)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels == (1L to 8L).map(_ -> 1L).toMap,
-      s"chain split into ${labels.values.toSet.size} clusters: $labels")
-    // the cap is a real bound: 3 rounds genuinely cannot finish this
-    // chain (this is the shape the old fixed-3-iteration code missed)
-    val capped = Dedup.propagateMinLabels(banded, maxIterations = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(capped.values.toSet.size > 1,
-      "an 8-doc chain finished in 3 rounds — test graph too easy")
   }
 
   test("jaccard pairs drop stopword-grade hot tokens before the self-join") {
@@ -1010,11 +1003,23 @@ class NativeExprSpec extends SparkSpec {
   test("native graft_cosine is bit-identical to the HOF composition") {
     val emb = spark.read.parquet(sf("embeddings"))
     val q = emb.filter(col("vec_id") < 5)
-    val native = Similarity.bruteForceTopK(q, emb, 10, "vec_id", "embedding", useNativeExpr = true)
+    val native = Similarity.bruteForceTopK(q, emb, 10, "vec_id", "embedding")
+      .orderBy(col("q_id"), col("rank"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    val hof = Similarity.bruteForceTopK(q, emb, 10, "vec_id", "embedding", useNativeExpr = false)
+    // reference: the HOF cosine over every (query, corpus) pair, ranked
+    // by a window in the operator's (sim DESC NULLS LAST, n_id ASC) order
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
+      .orderBy(col("sim").desc_nulls_last, col("n_id").asc_nulls_first)
+    val hof = q.select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+      .crossJoin(emb.select(col("vec_id").as("n_id"), col("embedding").as("n_vec")))
+      .filter(col("n_id") =!= col("q_id"))
+      .withColumn("sim", Similarity.cosine(col("q_vec"), col("n_vec")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 10)
+      .select(col("q_id"), col("rank"), col("n_id"), col("sim"))
+      .orderBy(col("q_id"), col("rank"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    assert(native.toSeq == hof.toSeq, "same order, same exact doubles")
+    assert(native.nonEmpty && native.toSeq == hof.toSeq, "same order, same exact doubles")
   }
 
   test("graft_normalize: NFC recomposition, ASCII identity, NULL, codegen=interpreted") {
@@ -1430,6 +1435,41 @@ class BpeMergesSpec extends SparkSpec {
   }
 }
 
+/** The sequential-replay reference for [[TextAnalysis.applyBpeMerges]]:
+  * each document becomes one U+0001-separated symbol string (a
+  * separator between every character, so inter-word spaces are
+  * ordinary symbols that no merge pair can ever contain — merges were
+  * learned on space-split words), and the merges replay IN LEARNED
+  * ORDER as chained regexp_replace passes, each with the lookahead
+  * greedy-adjacency semantics the trainer used. One full-text regex
+  * pass per merge: the independent witness the native priority
+  * application is pinned against, not a production path. Same output
+  * schema as the operator. */
+object BpeRegexReplay {
+  import org.apache.spark.sql.DataFrame
+
+  def applyBpeMerges(
+      df: DataFrame, idCol: String, textCol: String,
+      merges: Seq[(String, String)]): DataFrame = {
+    val sep = "\u0001"
+    val base = concat(lit(sep), array_join(split(col(textCol), ""), sep), lit(sep))
+    val merged = merges.foldLeft(base) { case (acc, (l, r)) =>
+      regexp_replace(acc,
+        java.util.regex.Pattern.quote(s"$sep$l$sep$r") +
+          s"(?=${java.util.regex.Pattern.quote(sep)})",
+        java.util.regex.Matcher.quoteReplacement(s"$sep$l$r"))
+    }
+    val nChars = length(col(textCol))
+    val nSpaces = nChars - length(regexp_replace(col(textCol), " ", ""))
+    val nTokens = (size(split(merged, sep)) - 2) - nSpaces
+    df.filter(col(textCol).isNotNull && col(textCol) =!= "")
+      .select(col(idCol).as("id"), nChars.as("n_chars"),
+        nTokens.cast("long").as("n_bpe_tokens"),
+        floor((nChars - nSpaces).cast("double") * 1e6 /
+          greatest(nTokens, lit(1))).cast("long").as("chars_per_token_micro"))
+  }
+}
+
 class BpeApplySpec extends SparkSpec {
   import spark.implicits._
 
@@ -1488,8 +1528,8 @@ class BpeApplySpec extends SparkSpec {
       }.toDF("id", "text")
       val native = canon(TextAnalysis.applyBpeMerges(
         applyDf, "id", "text", merges))
-      val regex = canon(TextAnalysis.applyBpeMerges(
-        applyDf, "id", "text", merges, useNativeExpr = false))
+      val regex = canon(BpeRegexReplay.applyBpeMerges(
+        applyDf, "id", "text", merges))
       assert(native == regex, s"trial $trial (${merges.size} merges) diverged")
     }
     // and on real documents with the corpus-trained 8-merge table
@@ -1500,8 +1540,7 @@ class BpeApplySpec extends SparkSpec {
       .map(r => (r.getString(1), r.getString(2))).toSeq
     assert(
       canon(TextAnalysis.applyBpeMerges(docs, "doc_id", "text", merges)) ==
-        canon(TextAnalysis.applyBpeMerges(docs, "doc_id", "text", merges,
-          useNativeExpr = false)))
+        canon(BpeRegexReplay.applyBpeMerges(docs, "doc_id", "text", merges)))
   }
 
   test("native application cost is flat in |merges| (the regex chain is linear in it)") {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.queries._
 
@@ -701,5 +703,60 @@ class PlanSpec extends SparkSpec {
         .findFirstIn(p).isDefined, s"bucket-keyed window exchange expected:\n$p")
       assert(p.contains("Join"), s"probe join-back expected:\n$p")
     } finally System.clearProperty("graft.rangeframe.decomposeOverBytes")
+  }
+
+  /** A single-file table above Spread's 8 MiB byte gate: 600k rows of
+    * two full-range hash longs, which Parquet cannot compress. Written
+    * once per suite. */
+  private lazy val wideFile: String = {
+    val out = tmpDir("graft-spread") + "/wide"
+    spark.range(0, 600000).select(col("id"),
+        xxhash64(col("id")).as("h1"), xxhash64(col("id"), lit(1)).as("h2"))
+      .coalesce(1).write.parquet(out)
+    out
+  }
+
+  private def spreadPlan(df: org.apache.spark.sql.DataFrame): String =
+    graft.operators.Spread.ifNarrow(df, col(df.columns.head))
+      .queryExecution.executedPlan.toString
+
+  test("Spread: an input under the byte gate plans no exchange") {
+    val p = spreadPlan(spark.read.parquet(s"$dir/documents.parquet"))
+    assert(!p.contains("Exchange"), s"sf0.001 documents must not spread:\n$p")
+  }
+
+  test("Spread: a narrow input over the byte gate spreads on the id, a wide one does not") {
+    val bytes = java.nio.file.Files.list(java.nio.file.Paths.get(wideFile))
+      .iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .map(java.nio.file.Files.size).sum
+    assert(bytes >= (8L << 20), s"the table must sit above the 8 MiB gate: $bytes bytes")
+    // one split: every file byte in one partition, whatever the core count
+    val key = "spark.sql.files.minPartitionNum"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try {
+      val narrow = spark.read.parquet(wideFile)
+      assert(narrow.rdd.getNumPartitions == 1)
+      val p = spreadPlan(narrow)
+      assert("Exchange".r.findAllIn(p).size == 1 &&
+        "Exchange hashpartitioning\\(id#\\d+L, 4\\)".r.findFirstIn(p).isDefined,
+        s"one id-keyed exchange expected:\n$p")
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    // the split gate: the same bytes in >= 4 splits stay as scanned
+    val split = "spark.sql.files.maxPartitionBytes"
+    val priorSplit = spark.conf.getOption(split)
+    spark.conf.set(split, (1L << 20).toString)
+    try {
+      val wide = spark.read.parquet(wideFile)
+      assert(wide.rdd.getNumPartitions >= 4)
+      val p = spreadPlan(wide)
+      assert(!p.contains("Exchange"), s"a parallel scan must not spread:\n$p")
+    } finally priorSplit match {
+      case Some(v) => spark.conf.set(split, v)
+      case None => spark.conf.unset(split)
+    }
   }
 }
