@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.ParquetMeta
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -45,31 +46,34 @@ object Tables {
 
   /** Analyzed-DataFrame catalog, keyed by (session, dir, table).
     *
-    * `spark.read.parquet` does driver-side work on EVERY call — file
-    * listing plus a footer read for schema inference (~75-100 ms per
-    * table on local[32]) — before a single row moves. A real
-    * deployment registers tables in a catalog once and
-    * resolves by name afterwards; this map is that catalog. Execution
-    * is NOT cached (no `.persist`): each action still scans the files,
-    * so data freshness only assumes the testdata dirs are immutable
-    * (they are driver-written, read-only to us). Per-query sink
-    * read-backs (s5/s6/l4...) do not go through Tables and stay
-    * uncached. Keyed by session identity so a stopped session's plans
-    * can't leak into a new one.
+    * Each table resolves once per session: one listing and one footer
+    * read through [[graft.sources.ParquetMeta.sparkSchema]], then a
+    * `spark.read.schema(...)` read that skips Spark's schema inference,
+    * so resolving a table starts no Spark job. A real deployment
+    * registers tables in a catalog once and resolves by name afterwards;
+    * this map is that catalog. Execution is NOT cached (no `.persist`):
+    * each action still scans the files, so data freshness only assumes
+    * the testdata dirs are immutable (they are driver-written, read-only
+    * to us). Per-query sink read-backs (s5/s6/l4...) do not go through
+    * Tables and stay uncached. Keyed by session identity so a stopped
+    * session's plans can't leak into a new one.
     */
   private val catalog =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     catalog.computeIfAbsent((spark, sfDir, name), { _ =>
-      if (name == "events") {
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val df = spark.read.parquet(s"$sfDir/$name.parquet")
-        df.withColumn("ts", toEpochNanos(df("ts"), df.schema("ts").dataType))
-      } else {
-        spark.read.parquet(s"$sfDir/$name.parquet")
-      }
+      val path = s"$sfDir/$name.parquet"
+      // before the schema is read: the footer conversion follows it
+      if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      normalized(name, spark.read.schema(ParquetMeta.sparkSchema(spark, path)).parquet(path))
     })
+
+  /** The per-table normalization applied to a raw read: `events.ts` as
+    * epoch-nanosecond longs; every other table unchanged. */
+  private[graft] def normalized(name: String, df: DataFrame): DataFrame =
+    if (name == "events") df.withColumn("ts", toEpochNanos(df("ts"), df.schema("ts").dataType))
+    else df
 
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",

@@ -643,9 +643,11 @@ object Dedup {
     val sc = df.sparkSession.sparkContext
     val base = df.filter(col(textCol).isNotNull)
       .select(col(idCol).as("id"), col(textCol).as("__txt"))
+    // hashed on the id, as Spread does: a round-robin repartition sorts
+    // the text payload before the exchange
     val spread =
       if (base.rdd.getNumPartitions < sc.defaultParallelism)
-        base.repartition(sc.defaultParallelism)
+        base.repartition(sc.defaultParallelism, col("id"))
       else base
     spread
       .select(col("id"),
@@ -911,6 +913,10 @@ object Dedup {
       .distinct()
   }
 
+  /** Star-round cap of [[componentsByKey]]: O(log² n) rounds put real
+    * graphs far below it. */
+  private val maxStarRounds = 50
+
   /** Connected components over a bipartite (node, key) incidence list:
     * nodes sharing any key are connected. Keys can be LSH buckets,
     * content digests, shared n-grams, blocking keys — anything that
@@ -928,13 +934,14 @@ object Dedup {
     * spreads one hop per round (measured: 16 rounds vs 6 on the l25
     * 4-gram graph). Every graft component query (l25's n-gram families,
     * l1g's LSH clusters) runs through this one implementation.
+    * A graph that has not converged after [[maxStarRounds]] rounds
+    * throws rather than return split families.
     *
     * Output: (id, label) — label = min node id of the component. */
   def componentsByKey(
       df: DataFrame,
       idCol: String,
       keyCol: String,
-      maxIterations: Int = 50,
       localFinishEdges: Long = 1L << 18): DataFrame = {
     val spark = df.sparkSession
     val inc = df.select(col(idCol).as("id"), col(keyCol).as("bucket"))
@@ -1072,7 +1079,7 @@ object Dedup {
     }
     var converged = false
     var round = 0
-    while (localDone.isEmpty && !converged && round < maxIterations) {
+    while (localDone.isEmpty && !converged && round < maxStarRounds) {
       round += 1
       // materialize the large-star half: the small-star half's symmetric
       // self-joins would otherwise inline (and re-execute) its plan ~4×
@@ -1103,10 +1110,10 @@ object Dedup {
         unpersistCheckpoint(edges)
       }
     }
+    // split families would be a wrong result, not a slow one
     if (localDone.isEmpty && !converged)
-      System.err.println(
-        s"[graft] componentsByKey: hit maxIterations=$maxIterations " +
-          "before the star fixpoint — some families may be split")
+      throw new IllegalStateException(
+        s"componentsByKey: no star fixpoint after $maxStarRounds rounds")
     // at the fixpoint every edge is (child, componentMin); nodes absent
     // from the edge set are singletons labeled by themselves. inc stays
     // persisted — the returned plan still reads it (freed by the

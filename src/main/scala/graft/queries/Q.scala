@@ -211,7 +211,7 @@ object QShared {
     * or stale, and the token is written after it returns; `use` then
     * runs, still under the lock, told whether this call built. The
     * loser of a cross-process race therefore reuses the winner's files. */
-  private def withLayoutLock[T](
+  private[graft] def withLayoutLock[T](
       key: String, path: String, srcs: Seq[java.io.File])(
       build: => Unit)(use: Boolean => T): T = {
     val monitor = layoutLocks.computeIfAbsent(key, _ => new Object)

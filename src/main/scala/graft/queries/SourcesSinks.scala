@@ -49,20 +49,15 @@ object SourcesSinks extends QGroup {
         val base = sink(dir, "s3_merge_schema")
         // the two schema-divergent files are test SETUP (the declared
         // capability is the mergeSchema READ); like s14's fragments they
-        // are laid out once behind the s12-style mtime guard instead of
-        // being rewritten identically every run
-        val src = new java.io.File(s"$dir/nation.parquet")
-        val mA = new java.io.File(s"$base/a", "_SUCCESS")
-        val mB = new java.io.File(s"$base/b", "_SUCCESS")
-        if (!(mA.exists() && mB.exists() && src.exists() &&
-            math.min(mA.lastModified(), mB.lastModified()) >= src.lastModified())) {
-          n.select(col("n_nationkey"), col("n_name"))
-            .write.mode("overwrite").parquet(s"$base/a")
-          n.select(col("n_nationkey"), col("n_regionkey"))
-            .write.mode("overwrite").parquet(s"$base/b")
-        }
+        // are laid out once per source version behind the layout lock
+        // instead of being rewritten identically every run
+        val src = Seq(new java.io.File(s"$dir/nation.parquet"))
+        for ((part, c) <- Seq("a" -> "n_name", "b" -> "n_regionkey"))
+          QShared.withLayoutLock(s"$base/$part", s"$base/$part", src) {
+            n.select(col("n_nationkey"), col(c))
+              .write.mode("overwrite").parquet(s"$base/$part")
+          }(_ => ())
         s.read.option("mergeSchema", "true").parquet(s"$base/a", s"$base/b")
-          
       },
       Some("""SELECT * FROM (
         |  SELECT n_nationkey, n_name, CAST(NULL AS INTEGER) AS n_regionkey FROM nation
@@ -378,15 +373,12 @@ object SourcesSinks extends QGroup {
         // the fragmented layout is test SETUP, not the declared
         // capability (compaction is); rebuilding 32 identical fragment
         // files per run measured the fragment writer, so it is laid out
-        // once behind the s12-style mtime guard — the compact() below
-        // still runs in full every execution
-        val fragMarker = new java.io.File(frag, "_SUCCESS")
-        val srcFile = new java.io.File(s"$dir/documents.parquet")
-        if (!(fragMarker.exists() && srcFile.exists() &&
-            fragMarker.lastModified() >= srcFile.lastModified()))
+        // once per source version behind the layout lock — the
+        // compact() below still runs in full every execution, under the
+        // same lock so concurrent runs do not race the output overwrite
+        QShared.withLayoutLock(frag, frag, Seq(new java.io.File(s"$dir/documents.parquet"))) {
           docs.repartition(32).write.mode("overwrite").parquet(frag)
-        graft.sources.Compaction.compact(
-          s, frag, out, targetBytes = 256L * 1024, schema = Some(docs.schema))
+        } { _ => graft.sources.Compaction.compact(s, frag, out, targetBytes = 256L * 1024) }
         s.read.schema(docs.schema).parquet(out)
           .groupBy(coalesce(col("lang"), lit("__null__")).as("lang_k"))
           .agg(count(lit(1)).as("n_docs"),

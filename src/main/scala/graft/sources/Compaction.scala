@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction — the standing maintenance op for a parquet
@@ -9,8 +8,10 @@ import org.apache.spark.sql.SparkSession
   * eventually dominates scans (the "small files problem"). Compaction
   * rewrites a directory into approximately target-sized files.
   *
-  * Shape: one metadata listing on the driver (file count + byte total —
-  * the same listing every scan's split planning performs), then ONE
+  * Shape: one [[ParquetMeta.listing]] of the input on the driver (file
+  * count + byte total — the same listing every scan's split planning
+  * performs), the input schema from its first footer through
+  * [[ParquetMeta.sparkSchema]] (no inference job), then ONE
   * round-robin repartition to `ceil(bytes / targetBytes)` writers. The
   * rewrite is a full read+write of the directory by construction —
   * that is what compaction IS — parallelized across the cluster; no
@@ -26,29 +27,15 @@ object Compaction {
   final case class CompactionStats(
       nFilesBefore: Int, bytesBefore: Long, nFilesAfter: Int)
 
-  /** List the data files of a parquet directory RECURSIVELY:
-    * (count, total bytes, sawSubdirFiles). Ignores _SUCCESS and other
-    * metadata sidecars; `sawSubdirFiles` reports whether any data file
+  /** The parquet part files of a table, RECURSIVELY, as
+    * [[ParquetMeta.listing]] sees them: (count, total bytes,
+    * sawSubdirFiles). `sawSubdirFiles` reports whether any part file
     * lives below the top level (a partitioned/Hive layout). */
-  def dataFiles(spark: SparkSession, dir: String): (Int, Long, Boolean) = {
-    val raw = new Path(dir)
-    val fs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = fs.makeQualified(raw) // listed paths come back qualified
-    var n = 0
-    var bytes = 0L
-    var nested = false
-    val it = fs.listFiles(p, /* recursive = */ true)
-    while (it.hasNext) {
-      val s = it.next()
-      val name = s.getPath.getName
-      if (s.isFile && !name.startsWith("_") && !name.startsWith(".")) {
-        n += 1
-        bytes += s.getLen
-        if (s.getPath.getParent != p) nested = true
-      }
-    }
-    (n, bytes, nested)
-  }
+  def dataFiles(spark: SparkSession, dir: String): (Int, Long, Boolean) =
+    counts(ParquetMeta.listing(dir, spark.sessionState.newHadoopConf()))
+
+  private def counts(l: ParquetMeta.Listing): (Int, Long, Boolean) =
+    (l.files.size, l.files.map(_.getLen).sum, l.nested)
 
   /** Rewrite `in` into `out` as ~`targetBytes`-sized files:
     * n = max(1, ceil(Σ bytes / targetBytes)) writers. Returns the
@@ -60,10 +47,11 @@ object Compaction {
       spark: SparkSession,
       in: String,
       out: String,
-      targetBytes: Long,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): CompactionStats = {
+      targetBytes: Long): CompactionStats = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val (nBefore, bytes, nested) = dataFiles(spark, in)
+    val conf = spark.sessionState.newHadoopConf()
+    val listing = ParquetMeta.listing(in, conf)
+    val (nBefore, bytes, nested) = counts(listing)
     // a partitioned (Hive-layout) input would have its partition
     // columns silently folded into data columns by this flat rewrite —
     // refuse loudly; partitioned tables compact per-partition-directory
@@ -74,11 +62,11 @@ object Compaction {
         "separately; a flat rewrite would fold partition columns into " +
         "the data files")
     val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    // explicit schema when provided: an all-empty input directory has
-    // no footer to infer from (and a stable read contract beats
-    // re-inference regardless — the s6/s13 precedent)
-    val reader = schema.fold(spark.read)(st => spark.read.schema(st))
-    reader.parquet(in)
+    // the input's own footer gives the schema; a Spark-written empty
+    // input still carries it in its one empty part file
+    val schema = ParquetMeta.sparkSchema(spark, in, listing,
+      ParquetMeta.footerOf(listing.files.head, conf))
+    spark.read.schema(schema).parquet(in)
       .repartition(n) // explicit numPartitions: AQE does not coalesce it
       .write.mode("overwrite").parquet(out)
     val (nAfter, _, _) = dataFiles(spark, out)

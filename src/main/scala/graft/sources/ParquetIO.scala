@@ -1,11 +1,8 @@
 package graft.sources
 
-import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -18,17 +15,6 @@ import scala.jdk.CollectionConverters._
   * the one read-time normalization Spark lacks.
   */
 object ParquetIO {
-
-  def read(
-      spark: SparkSession,
-      paths: Seq[String],
-      schema: Option[StructType] = None,
-      mergeSchema: Boolean = false): DataFrame = {
-    var r = spark.read
-    schema.foreach(st => r = r.schema(st))
-    if (mergeSchema) r = r.option("mergeSchema", "true")
-    r.parquet(paths: _*)
-  }
 
   /** R8/R10 semantics: default errorifexists + snappy. `bloomFilterCols`
     * writes a split-block bloom filter per named column (the reference
@@ -77,47 +63,18 @@ object ParquetIO {
     // file-list read without basePath would surface it as all-NULL.
     // The right plan for a partition-key lookup is Catalyst's own
     // partition pruning on a plain read (prunes to the one directory
-    // at planning time, zero data files opened elsewhere). Detect
-    // partition columns from the `name=value` path segments rather than
-    // any file's physical schema: under schema evolution a DATA column
-    // can be absent from individual part files, and probing one footer
-    // would misroute its lookups to a full scan, defeating the skip
-    // index (files genuinely lacking the column are instead kept by
-    // the bloom probe — absence is proven, never assumed).
-    val basePath = new org.apache.hadoop.fs.Path(path)
-    val fs = basePath.getFileSystem(conf)
-    val qualifiedBase = fs.makeQualified(basePath)
-    // climb each part file's parents up to the qualified base so only
-    // segments BELOW the table root count — a relative `path` or an
-    // ancestor directory containing '=' must not produce phantom
-    // partition columns (which would silently reroute data-column
-    // lookups to a full scan)
-    val partitionCols = listing.files.iterator.flatMap { st =>
-      val parents = Iterator.iterate(fs.makeQualified(st.getPath).getParent)(_.getParent)
-        .takeWhile(_ != null).toSeq
-      // if the base isn't an ancestor (e.g. `path` IS a single file),
-      // there are no partition directories by definition
-      if (!parents.contains(qualifiedBase)) Nil
-      else parents.takeWhile(_ != qualifiedBase)
-        .map(_.getName)
-        .filter(_.contains('='))
-        .map(_.takeWhile(_ != '='))
-    }.toSet
-    if (partitionCols.contains(column))
+    // at planning time, zero data files opened elsewhere). Partition
+    // columns come from the listing's `name=value` directories rather
+    // than any file's physical schema: under schema evolution a DATA
+    // column can be absent from individual part files, and probing one
+    // footer would misroute its lookups to a full scan, defeating the
+    // skip index (files genuinely lacking the column are instead kept
+    // by the bloom probe — absence is proven, never assumed).
+    if (listing.partitionCols.contains(column))
       return spark.read.parquet(path).filter(eq)
     val probed = ParquetMeta.bloomProbe(listing.files, column, value, conf)
-    // Without schema merging, Spark infers a flat table's schema from
-    // one footer — the first data file in path order — in a Spark job;
-    // the probe has already read that footer. Partition directories,
-    // summary files or other data files change what Spark reads, so
-    // those tables keep Spark's own inference.
-    val schema =
-      if (listing.flat && !spark.sessionState.conf.isParquetSchemaMergingEnabled) {
-        val (first, footer, _) = probed.head
-        val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-        asNullable(ParquetFileFormat.readSchemaFromFooter(
-          new Footer(first.getPath, footer), converter)).asInstanceOf[StructType]
-      } else spark.read.parquet(path).schema
+    // the probe has already read the first file's footer
+    val schema = ParquetMeta.sparkSchema(spark, path, listing, probed.head._2)
     val candidateFiles = probed.collect {
       case (file, _, kept) if kept.nonEmpty => file.getPath.toString
     }
@@ -130,16 +87,6 @@ object ParquetIO {
       // file-list read returns them as NULL
       spark.read.option("basePath", path).schema(schema)
         .parquet(candidateFiles: _*).filter(eq)
-  }
-
-  /** `t` with every field, array element and map value nullable, as
-    * Spark's file relation declares an inferred schema. */
-  private def asNullable(t: DataType): DataType = t match {
-    case s: StructType =>
-      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
-    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
-    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
-    case other => other
   }
 
   /** Bucketed table write: pre-shuffles once at write time so every

@@ -3,9 +3,12 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -19,6 +22,11 @@ import scala.jdk.CollectionConverters._
   * (`parquet.crypto.factory.class`). Callers holding a SparkSession
   * pass its Hadoop conf; the default is one conf loaded once per JVM.
   * Each call lists the table once and opens each file once.
+  *
+  * This is the one place that lists a Parquet table ([[listing]]) and
+  * turns its footer into the Spark schema a read would infer
+  * ([[sparkSchema]]); `Tables`, `ParquetIO.readPointLookup` and
+  * `Compaction` all go through it.
   */
 object ParquetMeta {
 
@@ -26,39 +34,50 @@ object ParquetMeta {
     * footer read does not pay for parsing a fresh `Configuration`. */
   private lazy val jvmConf: Configuration = new Configuration()
 
-  /** One listing of a table: its part files in path order, and whether
+  /** One listing of a table: its part files in path order, whether
     * they are exactly what Spark's file index reads — a single directory
     * (or file) of `.parquet` files, with no partition or other
     * subdirectories, no summary files (`_metadata`, `_common_metadata`)
-    * and no data files under another suffix. */
-  final case class Listing(files: Seq[FileStatus], flat: Boolean)
+    * and no data files under another suffix — whether any part file
+    * sits below the root directory, and the partition-column names of
+    * the `k=v` directories below the root. */
+  final case class Listing(
+      files: Seq[FileStatus], flat: Boolean, nested: Boolean, partitionCols: Set[String])
 
   /** Lists `path` once — via the Hadoop FileSystem API so URI-style and
     * remote paths (file:/, hdfs://, s3a://) resolve like local ones.
     * Recurses into subdirectories (skipping _temporary/_SUCCESS/hidden
     * entries) so partitioned layouts (`p=.../part-*.parquet`) resolve
-    * too. A plain file lists as itself. */
+    * too. A plain file lists as itself. Only directories BELOW `path`
+    * name partition columns: a relative `path` or an ancestor directory
+    * containing '=' never adds one. */
   def listing(path: String, conf: Configuration = jvmConf): Listing = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val root = fs.getFileStatus(p)
-    if (!root.isDirectory) return Listing(Seq(root), flat = true)
+    if (!root.isDirectory) return Listing(Seq(root), flat = true, nested = false, Set.empty)
     def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
     def summary(n: String) = n.startsWith("_metadata") || n.startsWith("_common_metadata")
     var flat = true
-    def walk(d: Path): Seq[FileStatus] = fs.listStatus(d).toSeq.flatMap { st =>
+    var nested = false
+    val partitionCols = Set.newBuilder[String]
+    def walk(d: Path, depth: Int): Seq[FileStatus] = fs.listStatus(d).toSeq.flatMap { st =>
       val n = st.getPath.getName
       // Spark's file index reads summary files and `_k=v` directories,
       // which this listing skips as hidden
       if (summary(n) || (hidden(n) && n.contains('='))) flat = false
       if (hidden(n)) Nil
-      else if (st.isDirectory) { flat = false; walk(st.getPath) }
-      else if (n.endsWith(".parquet")) Seq(st)
+      else if (st.isDirectory) {
+        flat = false
+        if (n.contains('=')) partitionCols += n.takeWhile(_ != '=')
+        walk(st.getPath, depth + 1)
+      }
+      else if (n.endsWith(".parquet")) { if (depth > 0) nested = true; Seq(st) }
       else { flat = false; Nil }
     }
-    val parts = walk(p).sortBy(_.getPath.toString)
+    val parts = walk(p, 0).sortBy(_.getPath.toString)
     if (parts.isEmpty) throw new IllegalArgumentException(s"no parquet files in $path")
-    Listing(parts, flat)
+    Listing(parts, flat, nested, partitionCols.result())
   }
 
   /** The parquet part files under `path` (itself, if a plain file), in
@@ -72,7 +91,7 @@ object ParquetMeta {
     ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
       HadoopReadOptions.builder(conf, file.getPath).build())
 
-  private def footerOf(file: FileStatus, conf: Configuration): ParquetMetadata = {
+  private[sources] def footerOf(file: FileStatus, conf: Configuration): ParquetMetadata = {
     val r = open(file, conf)
     try r.getFooter finally r.close()
   }
@@ -81,6 +100,39 @@ object ParquetMeta {
     * first part file. Use [[footers]] when per-file provenance matters. */
   def footer(path: String, conf: Configuration = jvmConf): ParquetMetadata =
     footerOf(listing(path, conf).files.head, conf)
+
+  /** The schema `spark.read.parquet(path)` infers, read from the first
+    * part file's footer without a Spark job: Spark's own footer→schema
+    * conversion under the session's current confs, made nullable as
+    * Spark's file relation declares it. Without schema merging Spark
+    * infers a flat table's schema from that one footer; partition
+    * directories, summary files or other data files change what Spark
+    * reads, so those tables keep Spark's own inference. */
+  def sparkSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val l = listing(path, conf)
+    sparkSchema(spark, path, l, footerOf(l.files.head, conf))
+  }
+
+  /** [[sparkSchema]] of an already-listed table, given the footer of its
+    * first part file (read only when the footer decides). */
+  def sparkSchema(spark: SparkSession, path: String, listing: Listing,
+      firstFooter: => ParquetMetadata): StructType =
+    if (listing.flat && !spark.sessionState.conf.isParquetSchemaMergingEnabled) {
+      val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      asNullable(ParquetFileFormat.readSchemaFromFooter(
+        new Footer(listing.files.head.getPath, firstFooter), converter)).asInstanceOf[StructType]
+    } else spark.read.parquet(path).schema
+
+  /** `t` with every field, array element and map value nullable, as
+    * Spark's file relation declares an inferred schema. */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   /** Every part file of a file-or-directory path with its footer. */
   def filesWithFooters(path: String, conf: Configuration = jvmConf): Seq[(Path, ParquetMetadata)] =
@@ -101,9 +153,6 @@ object ParquetMeta {
 
   def createdBy(path: String, conf: Configuration = jvmConf): Option[String] =
     Option(footer(path, conf).getFileMetaData.getCreatedBy)
-
-  def keyValueMeta(path: String, conf: Configuration = jvmConf): Map[String, String] =
-    footer(path, conf).getFileMetaData.getKeyValueMetaData.asScala.toMap
 
   /** R21 analog: row-group indexes whose start offset falls in
     * [splitStart, splitStart+len) — Hive/Drill split semantics. */

@@ -53,13 +53,7 @@ object ZOrder {
       width_bucket(v.cast("double"), lit(lo), lit(hi), lit(nb)) - 1L))
   }
 
-  /** Z-value column for `cols` of `df`, bucketed over their actual
-    * min/max (one aggregation pass; the per-column bounds are the only
-    * thing collected to the driver). */
-  def zvalue(df: DataFrame, cols: Seq[String], bits: Int = 16): Column =
-    zvalueFromBounds(columnBounds(df, cols), cols, bits)
-
-  /** Per-column (min, max) as doubles — the one stats job zvalue needs.
+  /** Per-column (min, max) as doubles — the one stats job a z-value needs.
     * None = empty input / all-null column. Callers laying out the SAME
     * immutable input repeatedly (bench reps; production re-OPTIMIZE
     * runs between data changes) should compute this once and reuse it

@@ -592,15 +592,16 @@ class PlanSpec extends SparkSpec {
     val lines = p.split("\n")
     def count(s: String) = lines.count(_.contains(s))
     // exactly ONE gram-keyed exchange (under the occurrence-count
-    // aggregate; the dup join probes it as a broadcast at this SF) and
-    // exactly ONE doc-keyed exchange — both island windows AND the
-    // final (id, run) span aggregation ride it (hashpartitioning(id)
-    // co-locates every (id, run) group, so no fourth exchange plans)
+    // aggregate; the dup join probes it as a broadcast at this SF).
+    // The scan has fewer splits than cores here, so both gram streams
+    // spread on a doc-keyed exchange: the count side's, and the dup
+    // side's, which both island windows AND the final (id, run) span
+    // aggregation ride (hashpartitioning(id) co-locates every (id, run)
+    // group, so no further doc exchange plans)
     assert(count("Exchange hashpartitioning(gram") == 1, p)
-    assert(count("Exchange hashpartitioning(id") == 1, p)
-    // the two repartition barriers that spread the gram kernel off the
-    // scan's few input splits
-    assert(count("Exchange RoundRobinPartitioning") == 2, p)
+    assert(count("Exchange hashpartitioning(id") == 2, p)
+    assert(count("Exchange RoundRobinPartitioning") == 0, p)
+    assert(count("+- Exchange ") == 3, p)
     // no exchange between the run window and the span aggregate
     val wi = lines.indexWhere(_.contains("Window [sum(brk"))
     val ai = lines.lastIndexWhere(l => l.contains("HashAggregate") && l.contains("span_start"))

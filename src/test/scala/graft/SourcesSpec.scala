@@ -14,31 +14,6 @@ class ParquetIOSpec extends SparkSpec {
       assert(ParquetIO.readPointLookup(spark, dir, column, v).schema == want, s"$column = $v")
   }
 
-  /** Spark jobs started while `body` runs. A marker job run afterwards
-    * flushes the listener queue, which delivers events in order. */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = "jobs-during-" + java.util.UUID.randomUUID()
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(group + "-marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(group + "-marker"), "listener never saw the marker job")
-      seen.toArray.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("write modes: errorifexists throws on rewrite, overwrite succeeds, append doubles") {
     val dir = tmpDir("graft-modes") + "/t"
     val df = Seq((1, "a"), (2, "b")).toDF("id", "s")
@@ -552,7 +527,7 @@ class CompactionSpec extends SparkSpec {
     assert(!nested, "flat layout expected")
     assert(nBefore == 24, s"fragmentation setup: $nBefore files")
     val target = 256L * 1024
-    val stats = Compaction.compact(spark, frag, out, target, Some(docs.schema))
+    val stats = Compaction.compact(spark, frag, out, target)
     val expectedN = math.max(1L, (bytes + target - 1) / target).toInt
     assert(stats.nFilesAfter == expectedN,
       s"file-count arithmetic: got ${stats.nFilesAfter}, expected $expectedN " +
@@ -570,13 +545,13 @@ class CompactionSpec extends SparkSpec {
     val docs = spark.read.parquet(sf("nation"))
     docs.repartition(4).write.mode("overwrite").parquet(frag)
     // huge target: everything lands in ONE file
-    val stats = Compaction.compact(spark, frag, out, 1L << 40, Some(docs.schema))
+    val stats = Compaction.compact(spark, frag, out, 1L << 40)
     assert(stats.nFilesAfter == 1, stats.toString)
     // empty input: zero data files in, one empty part file out, no crash
     val emptyIn = tmpDir("graft-compact2") + "/in"
     val emptyOut = tmpDir("graft-compact2") + "/out"
     docs.limit(0).write.mode("overwrite").parquet(emptyIn)
-    val es = Compaction.compact(spark, emptyIn, emptyOut, 1024, Some(docs.schema))
+    val es = Compaction.compact(spark, emptyIn, emptyOut, 1024)
     assert(spark.read.schema(docs.schema).parquet(emptyOut).count() == 0, es.toString)
   }
 

@@ -23,6 +23,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.beforeAll()
   }
 
+  /** Spark jobs started while `body` runs. A marker job run afterwards
+    * flushes the listener queue, which delivers events in order. */
+  def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = "jobs-during-" + java.util.UUID.randomUUID()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(group + "-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(group + "-marker"), "listener never saw the marker job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }

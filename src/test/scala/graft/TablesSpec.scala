@@ -23,10 +23,19 @@ class TablesSpec extends SparkSpec {
   private val micros  = 1704067207179575L
   private val nanos   = micros * 1000L
 
+  /** Tables reads a table's schema from its footer; it must be the
+    * schema Spark infers for the file, after the same normalization. */
+  private def assertInferredSchema(dir: String, name: String): Unit = {
+    val got = Tables(spark, dir, name).schema
+    val want = Tables.normalized(name, spark.read.parquet(s"$dir/$name.parquet")).schema
+    assert(got == want, s"$dir/$name: footer schema $got, inferred $want")
+  }
+
   private def roundTrip(write: String => Unit): (DataType, Long) = {
     val dir = tmpDir("graft-tables")
     write(s"$dir/events.parquet")
     val df = Tables(spark, dir, "events")
+    assertInferredSchema(dir, "events")
     val dt = df.schema("ts").dataType
     val v  = df.orderBy("event_id").select("ts").as[Long].head()
     (dt, v)
@@ -130,6 +139,9 @@ class TablesSpec extends SparkSpec {
       assert(df.columns.nonEmpty, s"$name has no columns")
       assert(df.limit(1).collect().nonEmpty, s"$name is empty")
     }
+    val root = new java.io.File(testdataRoot).getParent
+    for (sfDir <- Seq("sf0.001", "sf0.01", "sf0.1"); name <- Tables.names)
+      assertInferredSchema(s"$root/$sfDir", name)
     val emb = Tables(spark, testdataRoot, "embeddings")
     emb.schema("embedding").dataType match {
       case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => // ok
@@ -144,5 +156,15 @@ class TablesSpec extends SparkSpec {
     for (c <- Seq("user_id", "value"))
       assert(ev.schema(c).dataType.isInstanceOf[NumericType],
         s"events.$c must stay numeric")
+  }
+
+  test("Tables.apply starts no Spark job") {
+    // a fresh copy of the files, so the catalog resolves every table anew
+    val dir = tmpDir("graft-tables-jobs")
+    for (name <- Tables.names)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(sf(name)),
+        java.nio.file.Paths.get(s"$dir/$name.parquet"))
+    for (name <- Tables.names)
+      assert(jobsDuring(Tables(spark, dir, name)) == 0, s"resolving $name started a job")
   }
 }
