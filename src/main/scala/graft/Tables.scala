@@ -19,8 +19,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * nanoseconds, whatever the file stores:
   *
   *  - TIMESTAMP(NANOS): only representable in Spark as LongType via
-  *    `spark.sql.legacy.parquet.nanosAsLong` (runtime conf, set here)
-  *    — already nanos, passed through.
+  *    `spark.sql.legacy.parquet.nanosAsLong`, which `Engine.session`
+  *    sets and the footer→schema conversion follows — already nanos,
+  *    passed through.
   *  - TIMESTAMP(MICROS) isAdjustedToUTC=false → TimestampNTZType:
   *    sessions pin `spark.sql.session.timeZone=UTC`, so casting to
   *    TimestampType is value-preserving and `unix_micros * 1000`
@@ -64,8 +65,6 @@ object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     catalog.computeIfAbsent((spark, sfDir, name), { _ =>
       val path = s"$sfDir/$name.parquet"
-      // before the schema is read: the footer conversion follows it
-      if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       normalized(name, spark.read.schema(ParquetMeta.sparkSchema(spark, path)).parquet(path))
     })
 

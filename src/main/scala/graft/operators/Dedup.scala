@@ -52,11 +52,6 @@ object Dedup {
     transform(sequence(lit(0), lit(numHashes - 1)), h =>
       array_min(transform(hashes, x => xxhash64(x, h))))
 
-  /** MinHash signature straight from text (convenience; prefer
-    * materializing [[shingleHashes]] once when banding follows). */
-  def minHashSignature(text: Column, numHashes: Int): Column =
-    minHashSignatureFromHashes(shingleHashes(text), numHashes)
-
   /** LSH banding: candidate pairs (d1 < d2) that collide in ≥1 band.
     * Output: (d1, d2, n_bands) where n_bands counts colliding bands. */
   def minHashLshPairs(
@@ -841,19 +836,16 @@ object Dedup {
     * of ±1 contributions (sign of the j-seeded token hash) is positive.
     * (Per-bit independent hashes rather than bit-slicing one hash — the
     * Column API has no variable-shift, and independent hashes are the
-    * statistically cleaner variant anyway.) */
-  /** Per-bit signs from PRE-HASHED tokens (longs). Callers must
-    * materialize the hash array as its own column first — a Column
-    * subexpression referenced inside the 64-iteration lambda would be
-    * re-evaluated per bit (HOF lambdas don't CSE). */
+    * statistically cleaner variant anyway.) Per-bit signs from
+    * PRE-HASHED tokens (longs): callers must materialize the hash array
+    * as its own column first — a Column subexpression referenced inside
+    * the 64-iteration lambda would be re-evaluated per bit (HOF lambdas
+    * don't CSE). */
   def simHashBitsFromHashes(tokHashes: Column): Column =
     transform(sequence(lit(0), lit(63)), j =>
       when(aggregate(tokHashes, lit(0L), (acc, x) =>
         acc + when(xxhash64(x, j) > 0, 1L).otherwise(-1L)
       ) > 0, 1L).otherwise(0L))
-
-  def simHashBits(text: Column): Column =
-    simHashBitsFromHashes(transform(array_distinct(split(text, " ")), t => xxhash64(t)))
 
   private val pow2: Array[Long] = Array.tabulate(64)(j => 1L << j)
 
@@ -863,8 +855,6 @@ object Dedup {
   private def foldBits(bits: Column): Column =
     aggregate(zip_with(bits, typedlit(pow2), (b, p) => b * p),
       lit(0L), (acc, x) => acc.bitwiseOR(x))
-
-  def simHashFingerprint(text: Column): Column = foldBits(simHashBits(text))
 
   def simHash(df: DataFrame, idCol: String, textCol: String): DataFrame =
     // r13: graft_barrier instead of the repartition-as-barrier — token

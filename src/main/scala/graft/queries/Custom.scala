@@ -11,6 +11,34 @@ import graft.sources.AvroIO
   */
 object Custom extends QGroup {
 
+  /** s4's input: a 3-record Avro container holding the reference R7
+    * fixture's rows, `(id: string, id2: array<string>)` = ("1", ["1"]),
+    * ("2", ["2"]), ("3", ["3"]). Written once per JVM to a temp file by
+    * Avro's own `DataFileWriter`, so the scan reads a real writer's
+    * container and depends on no file outside the repo. */
+  private lazy val threeRecordsAvro: String = {
+    import org.apache.avro.SchemaBuilder
+    import org.apache.avro.file.DataFileWriter
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    val schema = SchemaBuilder.record("ThreeRecords").fields()
+      .requiredString("id")
+      .name("id2").`type`().array().items().stringType().noDefault()
+      .endRecord()
+    val f = java.io.File.createTempFile("graft-3records", ".avro")
+    f.deleteOnExit()
+    val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
+    try {
+      w.create(schema, f)
+      for (i <- 1 to 3) {
+        val r = new GenericData.Record(schema)
+        r.put("id", i.toString)
+        r.put("id2", java.util.List.of(i.toString))
+        w.append(r)
+      }
+    } finally w.close()
+    f.getPath
+  }
+
   def defs: Seq[QDef] = Seq(
 
     // U1: scalar Scala UDF — semantically identical to a built-in
@@ -49,14 +77,15 @@ object Custom extends QGroup {
       Some("""SELECT doc_id, i AS idx1, string_split(text, ' ')[i] AS tok
         |FROM documents, LATERAL (SELECT unnest(generate_series(1, len(string_split(text, ' ')))) AS i)""".stripMargin)),
 
-    // S4: Avro container scan (reference R7 fixture; DuckDB has no Avro
-    // reader → rows-only, full value checks in AvroIOSpec). The array
+    // S4: Avro container scan (the reference R7 fixture's records, see
+    // threeRecordsAvro; DuckDB has no Avro reader → rows-only, full
+    // value checks in AvroIOSpec). The array
     // column is JSON-rendered: raw array cells crash the driver's pandas
     // sorter (VERDICT r1 §2).
     QDef("s4_avro_scan",
       (s, _) =>
         QShared.jsonifyComplex(
-          AvroIO.read(s, "/root/reference/3records.1.AVRO")
+          AvroIO.read(s, threeRecordsAvro)
             .orderBy(col("id").asc_nulls_first)),
       None),
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -560,20 +561,13 @@ object LlmOps extends QGroup {
     // loudly at the oracle gate, which recomputes from the live table.
     QDef("l40b_span_removal",
       (s, dir) => {
-        val table = s"graft_l40b_spans_${Integer.toHexString(dir.hashCode)}"
         val path = QShared.sink(dir, "l40b_spans")
         val src = new java.io.File(s"$dir/documents.parquet")
-        def live = graft.operators.Dedup.exactSubstringSpans(
-          Tables(s, dir, "documents"), "doc_id", "text", n = 4)
         // wrong-not-slow when stale -> rides QShared.layout's
-        // (mtime, length) version key + per-table/per-path locking
-        val spans = QShared.layout(s, table, path, Seq(src),
-          ddl = live.schema.toDDL,
-          clusterSpec = "CLUSTERED BY (id) INTO 8 BUCKETS") {
-          live.repartition(8, col("id"))
-            .write.mode("overwrite").bucketBy(8, "id")
-            .option("path", path).saveAsTable(table)
-        }
+        // (mtime, length) version key + per-path locking
+        val spans = QShared.layout(s, path, Seq(src), Some(BucketSpec(8, Seq("id"), Nil)))(
+          graft.operators.Dedup.exactSubstringSpans(
+            Tables(s, dir, "documents"), "doc_id", "text", n = 4))
         graft.operators.Dedup.removeDuplicateSpans(
             Tables(s, dir, "documents"), "doc_id", "text", n = 4,
             spans = Some(spans))
@@ -630,21 +624,13 @@ object LlmOps extends QGroup {
     QDef("l41_incremental_substring_spans",
       (s, dir) => {
         val docs = Tables(s, dir, "documents")
-        val table = s"graft_l41_gc_${Integer.toHexString(dir.hashCode)}"
         val path = QShared.sink(dir, "l41_gramcounts")
         val src = new java.io.File(s"$dir/documents.parquet")
         // wrong-not-slow when stale (an undercounting sidecar silently
         // misses duplicated runs) -> rides QShared.layout's
-        // (mtime, length) version key + per-table/per-path locking
-        val sidecar = QShared.layout(s, table, path, Seq(src),
-          ddl = "gram BIGINT, c BIGINT",
-          clusterSpec = "CLUSTERED BY (gram) INTO 32 BUCKETS") {
-          graft.operators.Dedup
-            .gramCounts(docs.filter(col("doc_id") < 250), "text", n = 4)
-            .repartition(32, col("gram"))
-            .write.mode("overwrite").bucketBy(32, "gram")
-            .option("path", path).saveAsTable(table)
-        }
+        // (mtime, length) version key + per-path locking
+        val sidecar = QShared.layout(s, path, Seq(src), Some(BucketSpec(32, Seq("gram"), Nil)))(
+          graft.operators.Dedup.gramCounts(docs.filter(col("doc_id") < 250), "text", n = 4))
         graft.operators.Dedup.exactSubstringSpansIncremental(
             docs.filter(col("doc_id") >= 250), sidecar,
             "doc_id", "text", n = 4)
@@ -1189,13 +1175,11 @@ object LlmOps extends QGroup {
         // materialized layout) the rounds run with ZERO edge shuffles.
         // A stale layout the guard somehow missed still fails loudly at
         // the oracle gate, which recomputes edges from the live tables.
-        val table = s"graft_l26_edges_${Integer.toHexString(dir.hashCode)}"
         val path = QShared.sink(dir, "l26_edges")
         val liSrc = new java.io.File(s"$dir/lineitem.parquet")
         val ordSrc = new java.io.File(s"$dir/orders.parquet")
-        val edges = QShared.layout(s, table, path, Seq(liSrc, ordSrc),
-          ddl = "src BIGINT, dst BIGINT",
-          clusterSpec = "CLUSTERED BY (dst) INTO 32 BUCKETS") {
+        val edges = QShared.layout(s, path, Seq(liSrc, ordSrc),
+            Some(BucketSpec(32, Seq("dst"), Nil))) {
           val li = Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
           val ord = Tables(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
           val pairs = li.join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -1204,9 +1188,6 @@ object LlmOps extends QGroup {
             .distinct()
           pairs.select(col("a").as("src"), col("b").as("dst"))
             .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
-            .repartition(32, col("dst"))
-            .write.mode("overwrite").bucketBy(32, "dst")
-            .option("path", path).saveAsTable(table)
         }
         Graph.pageRank(edges, "src", "dst",
           iterations = 3, materialize = false)

@@ -1,6 +1,13 @@
 package graft.queries
 
+import graft.sources.ParquetMeta
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.StructType
 
 /** One certified query: a Spark definition and an optional DuckDB
   * oracle (ANSI SQL over the same parquet tables).
@@ -168,15 +175,12 @@ object QShared {
   def sink(dir: String, name: String): String =
     s"/tmp/graft_sink/${name}_${Integer.toHexString(dir.hashCode)}"
 
-  /** Per-table-name locks for the layout machinery: [[layout]] mutates
-    * shared state non-atomically (catalog DROP/CREATE on a
-    * deterministic table name, a session conf flag, the sink files),
-    * so two concurrent callers requesting the same layout could
-    * interleave — one drops the table between the other's CREATE and
-    * analyzed-resolution. The monitor serializes per table name within
-    * the JVM; cross-PROCESS builders sharing a sink dir are serialized
-    * by a file lock on `<path>.lock` (see [[withLayoutLock]]). Distinct tables
-    * stay concurrent (the a11/s11 concurrent-jobs path). */
+  /** Per-layout-path monitors for [[withLayoutLock]]: two callers in
+    * one JVM asking for the same layout build it once, and neither
+    * lists the layout's files while the other is still overwriting
+    * them. Cross-PROCESS builders sharing a sink dir are serialized by
+    * a file lock on `<path>.lock`. Distinct layouts stay concurrent (the
+    * a11/s11 concurrent-jobs path). */
   private val layoutLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
@@ -204,17 +208,16 @@ object QShared {
   }
 
   /** The ONE cross-build lock for persisted layouts: serialized per
-    * `key` within the JVM and per layout `path` across processes via a
-    * `java.nio` file lock on `<path>.lock` — two drivers sharing one
-    * testdata dir build once instead of racing the overwrite. Under the
-    * lock, `build` runs only when the layout's version token is missing
-    * or stale, and the token is written after it returns; `use` then
-    * runs, still under the lock, told whether this call built. The
-    * loser of a cross-process race therefore reuses the winner's files. */
-  private[graft] def withLayoutLock[T](
-      key: String, path: String, srcs: Seq[java.io.File])(
-      build: => Unit)(use: Boolean => T): T = {
-    val monitor = layoutLocks.computeIfAbsent(key, _ => new Object)
+    * layout `path` within the JVM and across processes via a `java.nio`
+    * file lock on `<path>.lock` — two drivers sharing one testdata dir
+    * build once instead of racing the overwrite. Under the lock,
+    * `build` runs only when the layout's version token is missing or
+    * stale, and the token is written after it returns; `use` then runs,
+    * still under the lock. The loser of a cross-process race therefore
+    * reuses the winner's files. */
+  private[graft] def withLayoutLock[T](path: String, srcs: Seq[java.io.File])(
+      build: => Unit)(use: => T): T = {
+    val monitor = layoutLocks.computeIfAbsent(path, _ => new Object)
     monitor.synchronized {
       val lockFile = new java.io.File(path + ".lock")
       Option(lockFile.getParentFile).foreach(_.mkdirs())
@@ -224,15 +227,14 @@ object QShared {
         java.nio.file.StandardOpenOption.WRITE)
       val flock = chan.lock()
       try {
-        val built = !layoutFresh(path, srcs)
-        if (built) {
+        if (!layoutFresh(path, srcs)) {
           build
           java.nio.file.Files.write(
             new java.io.File(path, "_GRAFT_SRC_VERSION").toPath,
             srcVersion(srcs).getBytes(
               java.nio.charset.StandardCharsets.UTF_8))
         }
-        use(built)
+        use
       } finally {
         flock.release()
         chan.close()
@@ -240,34 +242,58 @@ object QShared {
     }
   }
 
-  /** The mtime+length-guarded bucketed-table layout shared by
-    * [[bucketedFact]] and the l40b/l41 sidecars: build-or-reregister a
-    * bucketed external table at `path`, versioned on `src`, and return
-    * the resolved relation with the catalog entry dropped (the s12
-    * precedent — the resolved plan holds the bucketed file relation, so
-    * the session catalog never accumulates per-dir tables).
+  /** The one persisted-layout primitive, shared by [[bucketedFact]],
+    * [[eventsByTimeBucket]], [[variantEvents]] and the l26/l40b/l41
+    * sidecars: the layout at `path`, versioned on `srcs`, holding
+    * `data`.
     *
-    * Concurrency: [[withLayoutLock]] keyed by table name — two
-    * concurrent same-layout callers would otherwise race the
-    * DROP/CREATE/resolve/DROP sequence. `build` must write the table
-    * itself (saveAsTable with the path option). */
+    * A missing or stale layout is rebuilt under [[withLayoutLock]]. A
+    * bucketed one is written with one writer task per bucket, so each
+    * bucket is ONE file and the read-side merge join skips the
+    * per-bucket sort too. `bucketBy` has no path-only writer, so that
+    * write goes through `saveAsTable` and its catalog entry is dropped
+    * as soon as the write returns. An unbucketed layout is plain
+    * Parquet.
+    *
+    * Built or reused, the layout is read back as a file relation over
+    * `path` carrying `buckets`, so bucket-keyed joins and aggregations
+    * ride its HashPartitioning. The read runs no catalog statement and
+    * sets no conf, so defining a query leaves the session as it found
+    * it. Its schema is `data`'s, nullable as a file relation declares
+    * it: an empty bucketed write leaves no part file to read a footer
+    * from. Callers key `path` by everything in `buckets`, because
+    * reading one arrangement's files as another's would be silently
+    * wrong. */
   def layout(
-      s: SparkSession, table: String, path: String, srcs: Seq[java.io.File],
-      ddl: => String, clusterSpec: String)(build: => Unit): DataFrame =
-    withLayoutLock(table, path, srcs) {
-      s.sql(s"DROP TABLE IF EXISTS $table")
-      build
-    } { built =>
-      if (!built) {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        s.sql(s"CREATE TABLE $table ($ddl) USING parquet " +
-          s"$clusterSpec LOCATION '$path'")
+      s: SparkSession, path: String, srcs: Seq[java.io.File],
+      buckets: Option[BucketSpec])(data: => DataFrame): DataFrame = {
+    lazy val df = data
+    withLayoutLock(path, srcs) {
+      buckets match {
+        case Some(b) =>
+          val name = "graft_layout_" + new java.io.File(path).getName
+          val keys = b.bucketColumnNames
+          val w = df.repartition(b.numBuckets, keys.map(col): _*)
+            .write.mode("overwrite").bucketBy(b.numBuckets, keys.head, keys.tail: _*)
+          val sorted = b.sortColumnNames match {
+            case h +: t => w.sortBy(h, t: _*)
+            case _ => w
+          }
+          try sorted.option("path", path).saveAsTable(name)
+          finally s.sessionState.catalog.dropTable(
+            TableIdentifier(name), ignoreIfNotExists = true, purge = false)
+        case None => df.write.mode("overwrite").parquet(path)
       }
-      val out = s.table(table)
-      out.queryExecution.analyzed // resolve BEFORE the catalog entry drops
-      s.sql(s"DROP TABLE IF EXISTS $table")
-      out
+    } {
+      s.baseRelationToDataFrame(HadoopFsRelation(
+        new InMemoryFileIndex(s, Seq(new Path(path)), Map.empty, None),
+        partitionSchema = new StructType(),
+        dataSchema = ParquetMeta.asNullable(df.schema).asInstanceOf[StructType],
+        bucketSpec = buckets,
+        fileFormat = new ParquetFileFormat,
+        options = Map.empty)(s))
     }
+  }
 
   /** Data-sized bucket count for a dir's persisted layouts. The r11
     * three-decade pairing (sf0.1/sf1/sf10) caught the fixed 8-bucket
@@ -291,34 +317,26 @@ object QShared {
   }
 
   /** Mtime-guarded bucketed fact layout — the s12 machinery, shared:
-    * the table is written ONCE as `bucketBy(n, key).sortBy(key)` with
-    * one file per bucket (external table: catalog entry + data at the
-    * sink path) and every later call re-registers the existing files,
-    * so ALL fact-fact joins/aggregations on `keyCol` ride the layout's
-    * HashPartitioning with no exchange and no sort. This is the
-    * production pre-partitioning story for 100 TB fact joins: the
-    * relayout is paid once per ingested snapshot, amortized across
+    * the fact is written ONCE as `bucketBy(n, key).sortBy(key)` with
+    * one file per bucket and every later call reads the existing
+    * files back, so ALL fact-fact joins/aggregations on `keyCol` ride
+    * the layout's HashPartitioning with no exchange and no sort (the
+    * session's legacy bucketed-scan ordering flag, set by
+    * `Engine.session`, lets the read side trust the sortBy order). This
+    * is the production pre-partitioning story for 100 TB fact joins:
+    * the relayout is paid once per ingested snapshot, amortized across
     * every query after it. The relayout reruns whenever the source
     * parquet's (mtime, byte length) version token differs from the
     * layout's (see [[layout]]); a stale layout the guard somehow
     * missed still fails loudly at the oracle gate, which reads the
-    * live tables. Concurrent same-layout callers are serialized (see
-    * [[layout]]'s concurrency note).
-    *
-    * Returns the bucketed relation as a DataFrame; the catalog entry
-    * is dropped after resolution (the resolved plan holds the bucketed
-    * file relation — the s12 precedent), so the session catalog never
-    * accumulates per-dir tables. Sets the legacy bucketed-scan
-    * ordering flag (with its built-in one-file-per-bucket guard) so
-    * the read side trusts the layout's sortBy order. */
+    * live tables. */
   def bucketedFact(
       s: SparkSession, dir: String, name: String, keyCol: String,
       nBuckets0: Int = 0, sortCols: Seq[String] = Nil): DataFrame = {
     val nBuckets = if (nBuckets0 > 0) nBuckets0 else dirBuckets(dir)
-    s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     // the path MUST be keyed by the bucket column, not just the table:
     // two layouts of the same table on different keys are different
-    // data arrangements, and re-registering one as the other would be
+    // data arrangements, and reading one as the other would be
     // silently WRONG (same-key rows would no longer be co-located —
     // caught live by the r10 j29 probe, whose partkey request picked
     // up the orderkey files before this keyed the path).
@@ -327,26 +345,11 @@ object QShared {
     // the layout with no exchange AND no sort) — a different sort
     // signature is a different physical arrangement, so it is part of
     // the layout identity too.
-    val allSort = keyCol +: sortCols
     val sortSig = if (sortCols.isEmpty) "" else "_s" + sortCols.mkString("_")
-    val table = s"graft_bkt_${name}_${keyCol}_b${nBuckets}${sortSig}_" +
-      Integer.toHexString(dir.hashCode)
     val path = sink(dir, s"bucketed_${name}_${keyCol}_$nBuckets$sortSig")
     val src = new java.io.File(s"$dir/$name.parquet")
-    layout(s, table, path, Seq(src),
-      ddl = graft.Tables(s, dir, name).schema.toDDL,
-      clusterSpec = s"CLUSTERED BY ($keyCol) " +
-        s"SORTED BY (${allSort.mkString(", ")}) INTO $nBuckets BUCKETS") {
-      graft.Tables(s, dir, name)
-        // one writer task per bucket -> ONE file per bucket, so the
-        // read-side merge join skips the per-bucket sort too (many
-        // files per bucket keep bucketing but need a local sort)
-        .repartition(nBuckets, col(keyCol))
-        .write.mode("overwrite")
-        .bucketBy(nBuckets, keyCol).sortBy(allSort.head, allSort.tail: _*)
-        .option("path", path)
-        .saveAsTable(table)
-    }
+    layout(s, path, Seq(src), Some(BucketSpec(nBuckets, Seq(keyCol), keyCol +: sortCols)))(
+      graft.Tables(s, dir, name))
   }
 
   /** Date-partitioned lineitem — the OTHER canonical warehouse layout
@@ -364,12 +367,12 @@ object QShared {
   def lineitemByShipYear(s: SparkSession, dir: String): DataFrame = {
     val path = sink(dir, "lineitem_by_shipyear")
     val src = new java.io.File(s"$dir/lineitem.parquet")
-    withLayoutLock(s"shipyear_$path", path, Seq(src)) {
+    withLayoutLock(path, Seq(src)) {
       graft.Tables(s, dir, "lineitem")
         .withColumn("l_shipyear", year(col("l_shipdate")))
         .write.mode("overwrite").partitionBy("l_shipyear")
         .parquet(path)
-    }(_ => ())
+    }(())
     // explicit schema (source schema + the partition column): an EMPTY
     // source writes a zero-partition directory that schema inference
     // cannot read back (UNABLE_TO_INFER_SCHEMA), and a pinned schema is
@@ -406,19 +409,10 @@ object QShared {
       s: SparkSession, dir: String, bucketNs: Long,
       nBuckets0: Int = 0): DataFrame = {
     val nBuckets = if (nBuckets0 > 0) nBuckets0 else dirBuckets(dir)
-    val table = s"graft_bkt_events_tb${bucketNs}_b${nBuckets}_" +
-      Integer.toHexString(dir.hashCode)
     val path = sink(dir, s"bucketed_events_tb${bucketNs}_$nBuckets")
     val src = new java.io.File(s"$dir/events.parquet")
-    def base = graft.Tables(s, dir, "events")
-      .withColumn("bucket", expr(s"ts div $bucketNs"))
-    layout(s, table, path, Seq(src),
-      ddl = base.schema.toDDL,
-      clusterSpec = s"CLUSTERED BY (bucket) INTO $nBuckets BUCKETS") {
-      base.repartition(nBuckets, col("bucket"))
-        .write.mode("overwrite").bucketBy(nBuckets, "bucket")
-        .option("path", path).saveAsTable(table)
-    }
+    layout(s, path, Seq(src), Some(BucketSpec(nBuckets, Seq("bucket"), Nil)))(
+      graft.Tables(s, dir, "events").withColumn("bucket", expr(s"ts div $bucketNs")))
   }
 
   /** Variant-encoded events projection — the x6b FLOORS row's cluster
@@ -431,17 +425,9 @@ object QShared {
     * decomposition showed parse_json is ~4/5 of the live query's cost.
     * x6b itself keeps the live parse (it certifies the encode path);
     * x6d rides this projection. */
-  def variantEvents(s: SparkSession, dir: String): DataFrame = {
-    val table = s"graft_var_events_" + Integer.toHexString(dir.hashCode)
-    val path = sink(dir, "variant_events")
-    val src = new java.io.File(s"$dir/events.parquet")
-    def base = graft.Tables(s, dir, "events")
-      .select(col("event_id"), parse_json(col("props")).as("v"))
-    layout(s, table, path, Seq(src),
-      ddl = base.schema.toDDL, clusterSpec = "") {
-      base.write.mode("overwrite").option("path", path).saveAsTable(table)
-    }
-  }
+  def variantEvents(s: SparkSession, dir: String): DataFrame =
+    layout(s, sink(dir, "variant_events"), Seq(new java.io.File(s"$dir/events.parquet")), None)(
+      graft.Tables(s, dir, "events").select(col("event_id"), parse_json(col("props")).as("v")))
 
   /** Small driver-side statistics cache (the catalog's ANALYZE-stats
     * analog): column bounds and similar tiny stat results keyed by

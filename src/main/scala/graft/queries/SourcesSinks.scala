@@ -53,10 +53,10 @@ object SourcesSinks extends QGroup {
         // instead of being rewritten identically every run
         val src = Seq(new java.io.File(s"$dir/nation.parquet"))
         for ((part, c) <- Seq("a" -> "n_name", "b" -> "n_regionkey"))
-          QShared.withLayoutLock(s"$base/$part", s"$base/$part", src) {
+          QShared.withLayoutLock(s"$base/$part", src) {
             n.select(col("n_nationkey"), col(c))
               .write.mode("overwrite").parquet(s"$base/$part")
-          }(_ => ())
+          }(())
         s.read.option("mergeSchema", "true").parquet(s"$base/a", s"$base/b")
       },
       Some("""SELECT * FROM (
@@ -376,9 +376,9 @@ object SourcesSinks extends QGroup {
         // once per source version behind the layout lock — the
         // compact() below still runs in full every execution, under the
         // same lock so concurrent runs do not race the output overwrite
-        QShared.withLayoutLock(frag, frag, Seq(new java.io.File(s"$dir/documents.parquet"))) {
+        QShared.withLayoutLock(frag, Seq(new java.io.File(s"$dir/documents.parquet"))) {
           docs.repartition(32).write.mode("overwrite").parquet(frag)
-        } { _ => graft.sources.Compaction.compact(s, frag, out, targetBytes = 256L * 1024) }
+        } { graft.sources.Compaction.compact(s, frag, out, targetBytes = 256L * 1024) }
         s.read.schema(docs.schema).parquet(out)
           .groupBy(coalesce(col("lang"), lit("__null__")).as("lang_k"))
           .agg(count(lit(1)).as("n_docs"),

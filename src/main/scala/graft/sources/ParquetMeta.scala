@@ -96,10 +96,16 @@ object ParquetMeta {
     try r.getFooter finally r.close()
   }
 
-  /** Footer of `path`; a directory (Spark write output) resolves to its
-    * first part file. Use [[footers]] when per-file provenance matters. */
+  /** Footer of the one part file at `path` — a file, or a directory
+    * (Spark write output) holding exactly one. Throws
+    * `IllegalArgumentException` on a listing of several part files,
+    * rather than answering for the first one; use [[footers]] there. */
   def footer(path: String, conf: Configuration = jvmConf): ParquetMetadata =
-    footerOf(listing(path, conf).files.head, conf)
+    listing(path, conf).files match {
+      case Seq(only) => footerOf(only, conf)
+      case many => throw new IllegalArgumentException(
+        s"$path holds ${many.size} part files; this footer read describes one file")
+    }
 
   /** The schema `spark.read.parquet(path)` infers, read from the first
     * part file's footer without a Spark job: Spark's own footer→schema
@@ -126,7 +132,7 @@ object ParquetMeta {
 
   /** `t` with every field, array element and map value nullable, as
     * Spark's file relation declares an inferred schema. */
-  private def asNullable(t: DataType): DataType = t match {
+  private[graft] def asNullable(t: DataType): DataType = t match {
     case s: StructType =>
       StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
     case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
@@ -142,19 +148,22 @@ object ParquetMeta {
   def footers(path: String, conf: Configuration = jvmConf): Seq[ParquetMetadata] =
     filesWithFooters(path, conf).map(_._2)
 
-  /** R15: row count from footer only. */
+  /** R15: row count of every part file, from footers only. */
   def rowCount(path: String, conf: Configuration = jvmConf): Long =
-    footer(path, conf).getBlocks.asScala.map(_.getRowCount).sum
+    footers(path, conf).flatMap(_.getBlocks.asScala).map(_.getRowCount).sum
 
-  /** R13 analog: per-row-group (rows, totalByteSize, starting offset). */
+  /** R13 analog: per-row-group (rows, totalByteSize, starting offset),
+    * over every part file in path order. */
   def rowGroupStats(path: String, conf: Configuration = jvmConf): Seq[(Long, Long, Long)] =
-    footer(path, conf).getBlocks.asScala.toSeq.map(b =>
+    footers(path, conf).flatMap(_.getBlocks.asScala).map(b =>
       (b.getRowCount, b.getTotalByteSize, b.getStartingPos))
 
+  /** The writer of the one part file at `path` (see [[footer]]). */
   def createdBy(path: String, conf: Configuration = jvmConf): Option[String] =
     Option(footer(path, conf).getFileMetaData.getCreatedBy)
 
-  /** R21 analog: row-group indexes whose start offset falls in
+  /** R21 analog: row-group indexes of the one part file at `path` (see
+    * [[footer]]) whose start offset falls in
     * [splitStart, splitStart+len) — Hive/Drill split semantics. */
   def rowGroupsForSplit(path: String, splitStart: Long, splitLen: Long,
       conf: Configuration = jvmConf): Seq[Int] =
@@ -163,14 +172,15 @@ object ParquetMeta {
         b.getStartingPos < splitStart + splitLen => i
     }
 
-  /** Columns that carry a bloom filter in any row group (reference
-    * corpus artifact `bloom_filter.bin`: a footer-referenced SBBF). */
+  /** Columns that carry a bloom filter in any row group of any part file
+    * (reference corpus artifact `bloom_filter.bin`: a footer-referenced
+    * SBBF). */
   def bloomFilterColumns(path: String, conf: Configuration = jvmConf): Seq[String] =
-    footer(path, conf).getBlocks.asScala
+    footers(path, conf).flatMap(_.getBlocks.asScala)
       .flatMap(_.getColumns.asScala)
       .filter(_.getBloomFilterOffset >= 0)
       .map(_.getPath.toDotString)
-      .distinct.toSeq
+      .distinct
 
   /** (part-file path, row-group index) pairs whose bloom filter for
     * `column` might contain `value` — the skip primitive a reader uses

@@ -327,6 +327,41 @@ class BucketingSpec extends SparkSpec {
       "changed source version must rebuild the variant store")
   }
 
+  test("reusing a layout runs no catalog statement, starts no job and sets no conf") {
+    // each layout rider is defined twice on one dir: the first definition
+    // builds or reuses its layouts, the second only reads the existing
+    // files back as bucketed file relations
+    val riders = Seq("j12_q5_shape", "w2_analytic_window", "g1_tumbling_window",
+      "x6d_variant_store", "l26_pagerank", "l40b_span_removal",
+      "l41_incremental_substring_spans")
+    // l26's PageRank counts its node set and l41's incremental pass
+    // checkpoints its gram stream while they are defined. That is the
+    // operators' own work, the same over a plain read of the sidecar
+    // files, so only the layout's share of their jobs must be zero
+    def sidecar(name: String, ddl: String) =
+      spark.read.schema(ddl).parquet(graft.queries.QShared.sink(testdataRoot, name))
+    val operatorOnly: Map[String, () => Unit] = Map(
+      "l26_pagerank" -> (() => graft.operators.Graph.pageRank(
+        sidecar("l26_edges", "src BIGINT, dst BIGINT"), "src", "dst",
+        iterations = 3, materialize = false)),
+      "l41_incremental_substring_spans" -> (() =>
+        graft.operators.Dedup.exactSubstringSpansIncremental(
+          Tables(spark, testdataRoot, "documents").filter(col("doc_id") >= 250),
+          sidecar("l41_gramcounts", "gram BIGINT, c BIGINT"), "doc_id", "text", n = 4)))
+    for (name <- riders) {
+      val q = SparkEntry.queries(name)
+      val first = q(spark, testdataRoot).schema
+      val operatorJobs = operatorOnly.get(name).fold(0)(f => jobsDuring(f()))
+      val confs = spark.conf.getAll
+      var second: org.apache.spark.sql.types.StructType = null
+      val reuse = activityDuring { second = q(spark, testdataRoot).schema }
+      assert(reuse == Activity(jobs = operatorJobs, catalogEvents = 0),
+        s"$name: reusing its layouts must touch no catalog and start no job")
+      assert(second == first, s"$name: a reused layout must keep the built schema")
+      assert(spark.conf.getAll == confs, s"$name: reusing its layouts must set no conf")
+    }
+  }
+
   test("aggregation on the bucket key is exchange-free") {
     ParquetIO.writeBucketed(spark.read.parquet(sf("orders")),
       "orders_b2", buckets = 8, keys = Seq("o_custkey"))

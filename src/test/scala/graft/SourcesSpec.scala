@@ -57,6 +57,20 @@ class ParquetIOSpec extends SparkSpec {
     assert(all == stats.indices.toSeq)
   }
 
+  test("footer metadata of a multi-file table describes every part file") {
+    val dir = tmpDir("graft-footer-multi") + "/t"
+    val orders = spark.read.parquet(sf("orders"))
+    orders.repartition(4).write.parquet(dir)
+    val parts = ParquetMeta.partFiles(dir)
+    assert(parts.size == 4)
+    assert(ParquetMeta.rowCount(dir) == orders.count())
+    assert(ParquetMeta.rowGroupStats(dir).size ==
+      parts.map(p => ParquetMeta.rowGroupStats(p.toString).size).sum)
+    // the one-file readers refuse a listing of several files
+    intercept[IllegalArgumentException](ParquetMeta.createdBy(dir))
+    intercept[IllegalArgumentException](ParquetMeta.rowGroupsForSplit(dir, 0, Long.MaxValue / 2))
+  }
+
   test("footer reads honour a property set only on the conf passed in") {
     // an encrypted footer opens only when the decryption factory is on
     // the conf the footer is read with
