@@ -823,15 +823,6 @@ object Dedup {
         .distinct(),
       "k", expectedHistoryItems, fpp))
 
-  /** Exact token-set Jaccard for a pair of texts (used to verify LSH
-    * candidates). */
-  def jaccard(t1: Column, t2: Column): Column = {
-    val s1 = array_distinct(split(t1, " "))
-    val s2 = array_distinct(split(t2, " "))
-    val inter = size(array_intersect(s1, s2)).cast("double")
-    inter / (size(s1) + size(s2) - size(array_intersect(s1, s2))).cast("double")
-  }
-
   /** 64-bit SimHash over distinct word tokens: bit j is set iff the sum
     * of ±1 contributions (sign of the j-seeded token hash) is positive.
     * (Per-bit independent hashes rather than bit-slicing one hash — the

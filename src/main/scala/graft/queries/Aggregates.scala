@@ -1204,8 +1204,8 @@ object Aggregates extends QGroup {
         // approx range edges are COLUMN STATISTICS (the equi-height
         // histogram `ANALYZE TABLE … FOR COLUMNS` persists with
         // spark.sql.statistics.histogram.enabled), so they register once
-        // per immutable source in the mtime-keyed stats cache — the s7
-        // columnBounds precedent. Correctness is edge-INSENSITIVE: rid
+        // per immutable source in the mtime-keyed stats cache.
+        // Correctness is edge-INSENSITIVE: rid
         // is only a partitioning aid (any monotone bucketing yields the
         // same exact global ranks from the counts→offsets→row_number
         // reconstruction below), so a double-cast of the decimal edges

@@ -433,51 +433,33 @@ object QShared {
     * analog): column bounds and similar tiny stat results keyed by
     * (session, dir, tag, source version token) — the version token in
     * the KEY is the staleness guard (mtime for perf-only entries like
-    * a26/s7 bounds; (mtime, length) for the l13 history bloom, where a
+    * the a26 edges; (mtime, length) for the l13 history bloom, where a
     * stale entry would be unsound, not just slow), so a regenerated
     * source simply computes a fresh entry (and strands the old one;
-    * see the eviction below). Never caches row data. */
-  private val statsCacheMap =
-    new java.util.LinkedHashMap[
-      (org.apache.spark.sql.SparkSession, String, String, Any), AnyRef](
-      16, 0.75f, /* accessOrder = */ true)
-
-  /** Compute-if-absent with bounded growth: stranded entries (old
+    * see the eviction below). Never caches row data.
+    *
+    * Compute-if-absent with bounded growth: stranded entries (old
     * version tokens, dead sessions) accumulate ~bytes each, but a
     * long-running service regenerating sources forever shouldn't leak
     * even bytes. Past `cap` entries the LEAST-RECENTLY-USED HALF drops
-    * (the map is access-ordered: get() refreshes recency inside the
-    * lock, so a hot long-lived entry — e.g. the l13 history bloom, hit
-    * every batch — survives churn of one-off stat entries) — a
-    * wholesale clear was correct but thundering: every live stat
-    * recomputed at once in a long-lived service. The compute runs
-    * OUTSIDE the lock (it is a Spark job); a concurrent same-key race
-    * computes twice and keeps one — stats are idempotent, correctness
-    * never depended on the cache. */
+    * ([[graft.Lru]], one unit of weight per entry), so a hot long-lived
+    * entry — e.g. the l13 history bloom, hit every batch — survives
+    * churn of one-off stat entries. The compute runs OUTSIDE the lock
+    * (it is a Spark job); a concurrent same-key race computes twice and
+    * keeps one — stats are idempotent, correctness never depended on the
+    * cache. */
   object statsCache {
     private[graft] val cap = 4096
-    private[graft] def size: Int = statsCacheMap.synchronized(statsCacheMap.size())
+    private val lru =
+      new graft.Lru[(org.apache.spark.sql.SparkSession, String, String, Any), AnyRef](cap, _ => 1L)
+    private[graft] def size: Int = lru.size
     private[graft] def contains(
         key: (org.apache.spark.sql.SparkSession, String, String, Any)): Boolean =
-      statsCacheMap.synchronized(statsCacheMap.containsKey(key))
+      lru.contains(key)
     def computeIfAbsent(
         key: (org.apache.spark.sql.SparkSession, String, String, Any),
-        f: Any => AnyRef): AnyRef = {
-      val hit = statsCacheMap.synchronized(statsCacheMap.get(key))
-      if (hit != null) hit
-      else {
-        val v = f(key)
-        statsCacheMap.synchronized {
-          if (statsCacheMap.size() >= cap) {
-            val it = statsCacheMap.entrySet().iterator()
-            var toDrop = statsCacheMap.size() / 2
-            while (toDrop > 0 && it.hasNext) { it.next(); it.remove(); toDrop -= 1 }
-          }
-          val prior = statsCacheMap.putIfAbsent(key, v)
-          if (prior != null) prior else v
-        }
-      }
-    }
+        f: Any => AnyRef): AnyRef =
+      lru.getOrElseUpdate(key)(f(key))
   }
 
   /** DuckDB rendering of `TextAnalysis.qualityMetrics`' composite

@@ -123,17 +123,10 @@ object SourcesSinks extends QGroup {
         val cols = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"),
             col("l_extendedprice"))
-        // column-bounds stats registered once per immutable source
-        // (mtime-guarded) — statistics live in a catalog in production;
-        // recomputing the min/max job per layout run measured 93 ms
-        val zcols = Seq("l_orderkey", "l_partkey")
-        val srcM = new java.io.File(s"$dir/lineitem.parquet").lastModified()
-        val bounds = QShared.statsCache.computeIfAbsent(
-          (s, dir, "s7_zbounds", srcM),
-          _ => graft.sources.ZOrder.columnBounds(cols, zcols))
+        // the bounds come from lineitem's footer statistics: the input
+        // is a bare projection of a flat Parquet relation
         graft.sources.ZOrder.writeZOrdered(
-          cols, out, zcols, numFiles = 8,
-          bounds = Some(bounds.asInstanceOf[Seq[Option[(Double, Double)]]]))
+          cols, out, Seq("l_orderkey", "l_partkey"), numFiles = 8)
         // explicit schema: skip the read-back's footer-inference driver
         // pass (measured 85 → 40 ms/rep)
         s.read.schema(cols.schema).parquet(out)

@@ -5,6 +5,7 @@ import java.io.ByteArrayInputStream
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileStream, SeekableByteArrayInput}
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -119,29 +120,29 @@ object AvroIO {
     spark.createDataFrame(rows.asJava, sparkSchema)
   }
 
-  /** Writer schema parsed from container-file bytes. */
-  def schemaOfBytes(bytes: Array[Byte]): Schema = {
-    val r = new DataFileStream[GenericRecord](
-      new ByteArrayInputStream(bytes), new GenericDatumReader[GenericRecord]())
-    try r.getSchema finally r.close()
-  }
-
   /** Distributed read over many container files: one task per file via
-    * the binaryFile source, decode with flatMap on executors. The first
-    * file's writer schema is the read schema (filesystem-agnostic: the
-    * header comes from the already-fetched bytes, so s3a://hdfs:// paths
-    * work like local ones); files written with a DIFFERENT schema are
-    * decoded through Avro's resolution against it and fail loudly on
-    * incompatibility rather than silently drifting. */
+    * the binaryFile source, decode with flatMap on executors. The read
+    * schema is the writer schema in the header of the first file the
+    * glob matches, in path order (hidden `_`/`.` names skipped, as the
+    * scan skips them), read on the driver through the Hadoop FileSystem
+    * (`globStatus`, then a stream over `fs.open`), so s3a:// and hdfs://
+    * paths work like local ones and no Spark job runs before the action.
+    * Files written with a DIFFERENT schema are decoded through Avro's
+    * resolution against it and fail loudly on incompatibility rather
+    * than silently drifting. */
   def readDistributed(spark: SparkSession, globPath: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val files = spark.read.format("binaryFile").load(globPath)
-      .select(col("path"), col("content"))
-    val first = files.select(col("content")).limit(1).collect()
-    require(first.nonEmpty, s"no files match $globPath")
-    val schemaJson = schemaOfBytes(first.head.getAs[Array[Byte]](0)).toString
+    val glob = new Path(globPath)
+    val fs = glob.getFileSystem(spark.sessionState.newHadoopConf())
+    val first = Option(fs.globStatus(glob)).toSeq.flatten
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(_.getPath).sortBy(_.toString).headOption
+      .getOrElse(throw new IllegalArgumentException(s"no files match $globPath"))
+    val in = new DataFileStream[GenericRecord](fs.open(first), new GenericDatumReader[GenericRecord]())
+    val schemaJson = try in.getSchema.toString finally in.close()
     val sparkSchema = toSparkSchema(new Schema.Parser().parse(schemaJson))
-    val rowRdd = files.select(col("content")).rdd
+    val rowRdd = spark.read.format("binaryFile").load(globPath).select(col("content")).rdd
       .flatMap(r => decodeBytes(r.getAs[Array[Byte]](0), schemaJson))
     spark.createDataFrame(rowRdd, sparkSchema)
   }

@@ -48,8 +48,12 @@ object ParquetIO {
     * filters can't rule out" before Spark's own row-group pruning takes
     * over inside each file. Falls back to scanning a file when it has no
     * (or an unreadable) filter — absence can only be proven, never
-    * assumed. The table is listed once and each footer opened once; on
-    * a non-partitioned table no Spark job runs before the action. */
+    * assumed. The table is listed once; footers and filters come from
+    * `ParquetMeta`'s metadata cache, so a repeated lookup on an unchanged
+    * table opens no file. On a non-partitioned table no Spark job runs
+    * before the action, and a key the filters prove absent from every
+    * file answers on the driver: an empty local relation with the
+    * table's schema, whose collect starts no job either. */
   def readPointLookup(
       spark: SparkSession,
       path: String,
@@ -79,7 +83,7 @@ object ParquetIO {
       case (file, _, kept) if kept.nonEmpty => file.getPath.toString
     }
     if (candidateFiles.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     else
       // basePath keeps directory-derived partition values recoverable
       // when the surviving files sit under partition directories — the

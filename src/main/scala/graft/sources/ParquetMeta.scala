@@ -4,7 +4,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnChunkMetaData, FileMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
@@ -21,7 +22,34 @@ import scala.jdk.CollectionConverters._
   * file system, the read options and the per-file decryption lookup
   * (`parquet.crypto.factory.class`). Callers holding a SparkSession
   * pass its Hadoop conf; the default is one conf loaded once per JVM.
-  * Each call lists the table once and opens each file once.
+  * Each call lists the table once.
+  *
+  * Metadata is read at most once per file version and JVM. A private
+  * cache holds each part file's decoded footer and, per (row group,
+  * column), its bloom filter's bitset or the fact that the filter could
+  * not be read; every footer read ([[footers]], [[rowGroupStats]],
+  * [[sparkSchema]], `Compaction`, `ParquetIO.rebaseNeeded`,
+  * `ZOrder.columnBounds`) and every [[bloomProbe]] goes through it, and
+  * a probe opens a file only when its footer or a needed filter is
+  * missing — one open then fills both.
+  *  - **Key.** The file version (path, length, modification time) from
+  *    the `FileStatus` the listing already holds, so a hit costs no
+  *    extra `stat`. Spark's writers never reuse a part-file name, so an
+  *    overwrite lands under new keys and the old entries age out. A file
+  *    rewritten in place under the same path, with the same length and
+  *    within the same millisecond, would be served stale.
+  *  - **Bound.** A fixed byte budget with LRU eviction ([[graft.Lru]]):
+  *    a filter weighs its bitset, a footer an estimate per column chunk.
+  *  - **Encryption.** A read under a conf that sets a property changing
+  *    how a footer decodes — the decryption factory, signed string
+  *    min/max — neither reads nor fills the cache, and a footer whose
+  *    encryption type is not `UNENCRYPTED` is never cached, so a caller
+  *    without keys never sees what a caller with keys decrypted.
+  *  - **Probes.** A `BlockSplitBloomFilter` hashes through per-instance
+  *    scratch fields, so one instance probed from two threads can drop a
+  *    present key. The cache keeps bitset bytes and each probe wraps
+  *    them in a fresh filter.
+  * Cached footers are shared between callers: treat them as read-only.
   *
   * This is the one place that lists a Parquet table ([[listing]]) and
   * turns its footer into the Spark schema a read would infer
@@ -91,10 +119,80 @@ object ParquetMeta {
     ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
       HadoopReadOptions.builder(conf, file.getPath).build())
 
-  private[sources] def footerOf(file: FileStatus, conf: Configuration): ParquetMetadata = {
-    val r = open(file, conf)
-    try r.getFooter finally r.close()
+  /** A part file's version: the cache key (see the header). */
+  private final case class Version(path: String, length: Long, mtime: Long)
+  private def versionOf(file: FileStatus): Version =
+    Version(file.getPath.toString, file.getLen, file.getModificationTime)
+
+  /** What a cache entry holds: a file's footer, or the bitset of one
+    * column chunk's bloom filter (empty when the filter can't be read). */
+  private sealed trait Entry
+  private final case class FooterOf(version: Version) extends Entry
+  private final case class BloomOf(version: Version, rowGroup: Int, column: String) extends Entry
+
+  private val cacheBudgetBytes = 32L << 20
+
+  private val cache = new graft.Lru[Entry, AnyRef](cacheBudgetBytes, {
+    case footer: ParquetMetadata =>
+      1024L + 512L * footer.getBlocks.asScala.map(_.getColumns.size.toLong).sum
+    case bitset: Array[Byte] => 64L + bitset.length
+    case _ => 64L
+  })
+
+  /** Conf properties that change what a footer read returns. */
+  private val decodeProperties =
+    Seq("parquet.crypto.factory.class", "parquet.strings.signed-min-max.enabled")
+
+  private def cacheable(conf: Configuration): Boolean =
+    decodeProperties.forall(conf.get(_) == null)
+
+  private def unencrypted(footer: ParquetMetadata): Boolean =
+    footer.getFileMetaData.getEncryptionType == FileMetaData.EncryptionType.UNENCRYPTED
+
+  private[sources] def footerOf(file: FileStatus, conf: Configuration): ParquetMetadata =
+    metadata(file, None, conf)._1
+
+  /** A file's footer and, when `column` is given, per row group the
+    * bitset of that column's bloom filter: None where the chunk has no
+    * filter, empty where the filter can't be read. Served from the cache
+    * (see the header); the file is opened only for what is missing. */
+  private def metadata(file: FileStatus, column: Option[String],
+      conf: Configuration): (ParquetMetadata, Seq[Option[Array[Byte]]]) = {
+    val version = versionOf(file)
+    val useCache = cacheable(conf)
+    def cached(key: Entry): Option[AnyRef] = if (useCache) cache.get(key) else None
+    var reader: ParquetFileReader = null
+    def opened: ParquetFileReader = { if (reader == null) reader = open(file, conf); reader }
+    try {
+      val footer = cached(FooterOf(version)).getOrElse {
+        val read = opened.getFooter
+        if (useCache && unencrypted(read)) cache.putIfAbsent(FooterOf(version), read) else read
+      }.asInstanceOf[ParquetMetadata]
+      val store = useCache && unencrypted(footer)
+      val bitsets = column.toSeq.flatMap { c =>
+        footer.getBlocks.asScala.toSeq.zipWithIndex.map { case (block, i) =>
+          chunk(block, c).filter(_.getBloomFilterOffset >= 0).map { cc =>
+            cached(BloomOf(version, i, c)).getOrElse {
+              // readBloomFilter returns null when the filter can't be
+              // decoded (IO error, encrypted column) → must read
+              val bitset = Option(opened.getBloomFilterDataReader(block).readBloomFilter(cc))
+                .fold(Array.emptyByteArray) { bloom =>
+                  val out = new java.io.ByteArrayOutputStream(bloom.getBitsetSize)
+                  bloom.writeTo(out)
+                  out.toByteArray
+                }
+              if (store) cache.putIfAbsent(BloomOf(version, i, c), bitset) else bitset
+            }.asInstanceOf[Array[Byte]]
+          }
+        }
+      }
+      (footer, bitsets)
+    } finally if (reader != null) reader.close()
   }
+
+  /** The column chunk of `column` in a row group, if it has one. */
+  private def chunk(block: BlockMetaData, column: String): Option[ColumnChunkMetaData] =
+    block.getColumns.asScala.find(_.getPath.toDotString == column)
 
   /** Footer of the one part file at `path` — a file, or a directory
     * (Spark write output) holding exactly one. Throws
@@ -194,62 +292,60 @@ object ParquetMeta {
     }
 
   /** Each listed file with its footer and the indexes of the row groups
-    * whose bloom filter for `column` might contain `value`, opening each
-    * file once. A row group is kept (must-read) when it has no filter,
-    * the filter can't be decoded, or the probe value can't be coerced to
-    * the column's parquet PHYSICAL type — the filter hashed physical
-    * encodings at write time, so probing with the wrong width (e.g. a
-    * Long against an INT32 column) would silently miss every file;
-    * coercion, not runtime-class dispatch, keeps that sound. */
+    * whose bloom filter for `column` might contain `value`, served from
+    * the metadata cache (see the header). A row group is kept (must-read)
+    * when it has no filter, the filter can't be decoded, or the probe
+    * value can't be coerced to the column's parquet PHYSICAL type — the
+    * filter hashed physical encodings at write time, so probing with the
+    * wrong width (e.g. a Long against an INT32 column) would silently
+    * miss every file; coercion, not runtime-class dispatch, keeps that
+    * sound. */
   def bloomProbe(files: Seq[FileStatus], column: String, value: Any,
       conf: Configuration): Seq[(FileStatus, ParquetMetadata, Seq[Int])] =
     files.map { file =>
-      val r = open(file, conf)
-      try {
-        val kept = r.getFooter.getBlocks.asScala.toSeq.zipWithIndex.filter { case (block, _) =>
-          block.getColumns.asScala.find(_.getPath.toDotString == column) match {
-            case Some(cc) if cc.getBloomFilterOffset >= 0 =>
-              // readBloomFilter returns null when the filter can't be
-              // decoded (IO error, encrypted column) → must read
-              Option(r.getBloomFilterDataReader(block).readBloomFilter(cc)) match {
-                case Some(bloom) =>
-                  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-                  val hash: Option[Long] = cc.getPrimitiveType.getPrimitiveTypeName match {
-                    case INT64 => value match {
-                      case l: Long => Some(bloom.hash(l))
-                      case iv: Int => Some(bloom.hash(iv.toLong))
-                      case _ => None
-                    }
-                    case INT32 => value match {
-                      case iv: Int => Some(bloom.hash(iv))
-                      case l: Long if l.isValidInt => Some(bloom.hash(l.toInt))
-                      case _ => None
-                    }
-                    case DOUBLE => value match {
-                      case d: Double => Some(bloom.hash(d))
-                      case f: Float => Some(bloom.hash(f.toDouble))
-                      case _ => None
-                    }
-                    case FLOAT => value match {
-                      case f: Float => Some(bloom.hash(f))
-                      case _ => None
-                    }
-                    case BINARY => value match {
-                      case s: String =>
-                        Some(bloom.hash(org.apache.parquet.io.api.Binary.fromString(s)))
-                      case b: Array[Byte] =>
-                        Some(bloom.hash(org.apache.parquet.io.api.Binary.fromConstantByteArray(b)))
-                      case _ => None
-                    }
-                    case _ => None
-                  }
-                  hash.forall(bloom.findHash)
-                case None => true
-              }
-            case _ => true // no filter → must read
-          }
-        }.map(_._2)
-        (file, r.getFooter, kept)
-      } finally r.close()
+      val (footer, bitsets) = metadata(file, Some(column), conf)
+      val kept = footer.getBlocks.asScala.toSeq.zip(bitsets).zipWithIndex.collect {
+        case ((_, None), i) => i // no filter → must read
+        case ((block, Some(bitset)), i) if mightContain(bitset, chunk(block, column).get, value) => i
+      }
+      (file, footer, kept)
+    }
+
+  /** Whether a bloom filter with this bitset might hold `value`, probed
+    * through a fresh filter instance (see the header's Probes). */
+  private def mightContain(bitset: Array[Byte], cc: ColumnChunkMetaData, value: Any): Boolean =
+    bitset.isEmpty || {
+      val bloom = new BlockSplitBloomFilter(bitset)
+      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+      val hash: Option[Long] = cc.getPrimitiveType.getPrimitiveTypeName match {
+        case INT64 => value match {
+          case l: Long => Some(bloom.hash(l))
+          case iv: Int => Some(bloom.hash(iv.toLong))
+          case _ => None
+        }
+        case INT32 => value match {
+          case iv: Int => Some(bloom.hash(iv))
+          case l: Long if l.isValidInt => Some(bloom.hash(l.toInt))
+          case _ => None
+        }
+        case DOUBLE => value match {
+          case d: Double => Some(bloom.hash(d))
+          case f: Float => Some(bloom.hash(f.toDouble))
+          case _ => None
+        }
+        case FLOAT => value match {
+          case f: Float => Some(bloom.hash(f))
+          case _ => None
+        }
+        case BINARY => value match {
+          case s: String =>
+            Some(bloom.hash(org.apache.parquet.io.api.Binary.fromString(s)))
+          case b: Array[Byte] =>
+            Some(bloom.hash(org.apache.parquet.io.api.Binary.fromConstantByteArray(b)))
+          case _ => None
+        }
+        case _ => None
+      }
+      hash.forall(bloom.findHash)
     }
 }

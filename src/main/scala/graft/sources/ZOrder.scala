@@ -1,7 +1,16 @@
 package graft.sources
 
+import org.apache.parquet.hadoop.metadata.BlockMetaData
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType}
+
+import scala.jdk.CollectionConverters._
 
 /** Z-order (Morton-curve) clustered layout writer — the multi-dimensional
   * data-skipping technique for 100 TB fact tables.
@@ -14,12 +23,13 @@ import org.apache.spark.sql.functions._
   * dimension simultaneously, so parquet footer stats (and row-group
   * stats inside each file) prune files for predicates on any of them.
   * This is the layout strategy behind Delta/Iceberg `OPTIMIZE ZORDER`,
-  * re-expressed as plain Spark: a cheap stats pass, a codegen'd bit
+  * re-expressed as plain Spark: column bounds, a codegen'd bit
   * interleave, `repartitionByRange` on the z-value, and a sorted write.
   *
-  * Scale shape: one min/max aggregation over the scan (combiner-only,
-  * tiny result collected to the driver — stats collection, not data),
-  * then one range-exchange on the z-value. No other shuffle; the
+  * Scale shape: bounds from the input's footer statistics when it is a
+  * plain Parquet read (else one min/max aggregation over the scan —
+  * combiner-only, tiny result collected to the driver), then one
+  * range-exchange on the z-value. No other shuffle; the
   * interleave is a pure Column expression evaluated inside the scan
   * stage. Reference capability context: the reference's layout control
   * is row-group sizing only (`ParquetConverter.java:173-175`); z-order
@@ -53,22 +63,108 @@ object ZOrder {
       width_bucket(v.cast("double"), lit(lo), lit(hi), lit(nb)) - 1L))
   }
 
-  /** Per-column (min, max) as doubles — the one stats job a z-value needs.
-    * None = empty input / all-null column. Callers laying out the SAME
-    * immutable input repeatedly (bench reps; production re-OPTIMIZE
-    * runs between data changes) should compute this once and reuse it
-    * through [[zvalueFromBounds]] — it is table-statistics registration
-    * (the Tables-catalog argument), not a result cache; guard staleness
-    * with the source mtime like every persisted layout here. */
+  /** Per-column (min, max) as doubles. None = empty input / all-null
+    * column.
+    *
+    * When `df` is a flat Parquet relation, or a projection of bare
+    * columns of one, with no partition columns, and every z column is a
+    * top-level INT, BIGINT, FLOAT or DOUBLE stored as that physical type,
+    * the bounds come from the part files' footer statistics through
+    * `ParquetMeta`'s metadata cache: no Spark job, and no file opened
+    * twice in a JVM. That needs every row group to carry statistics for
+    * the column with a non-NaN min and max, or to be all-null. Any other
+    * input runs one min/max aggregate over the scan. So a repeated layout
+    * run over an unchanged Parquet input pays nothing for its bounds,
+    * with no hand-kept cache at the caller.
+    *
+    * Footer and aggregate bounds can differ on a FLOAT or DOUBLE column
+    * that holds NaN in a file whose writer leaves NaN out of its min/max
+    * statistics: the footer's max is finite, the aggregate's is NaN.
+    * (parquet-mr counts NaN as the largest value, and its reader drops
+    * such a min/max, so its own files fall back to the aggregate.) Bounds
+    * only steer clustering ([[bucketize]] clamps), so the rows written
+    * are the same either way. */
   def columnBounds(
-      df: DataFrame, cols: Seq[String]): Seq[Option[(Double, Double)]] = {
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c).cast("double")).as(s"lo_$c"),
-        max(col(c).cast("double")).as(s"hi_$c")))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    cols.indices.map { i =>
-      if (row.isNullAt(2 * i) || row.isNullAt(2 * i + 1)) None
-      else Some((row.getDouble(2 * i), row.getDouble(2 * i + 1)))
+      df: DataFrame, cols: Seq[String]): Seq[Option[(Double, Double)]] =
+    footerBounds(df, cols).getOrElse {
+      val aggs = cols.flatMap(c =>
+        Seq(min(col(c).cast("double")).as(s"lo_$c"),
+          max(col(c).cast("double")).as(s"hi_$c")))
+      val row = df.agg(aggs.head, aggs.tail: _*).head()
+      cols.indices.map { i =>
+        if (row.isNullAt(2 * i) || row.isNullAt(2 * i + 1)) None
+        else Some((row.getDouble(2 * i), row.getDouble(2 * i + 1)))
+      }
+    }
+
+  /** [[columnBounds]] from footer statistics, or None when `df` or its
+    * files do not qualify. */
+  private def footerBounds(
+      df: DataFrame, cols: Seq[String]): Option[Seq[Option[(Double, Double)]]] = {
+    val plan = df.queryExecution.analyzed
+    val relation = plan match {
+      case r: LogicalRelation => Some(r.relation)
+      case Project(list, r: LogicalRelation) if list.forall(_.isInstanceOf[AttributeReference]) =>
+        Some(r.relation)
+      case _ => None
+    }
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    val attrs = cols.flatMap(c => plan.output.find(a => resolver(a.name, c)))
+    relation match {
+      case Some(fs: HadoopFsRelation) if fs.fileFormat.isInstanceOf[ParquetFileFormat] &&
+          fs.partitionSchema.isEmpty && attrs.size == cols.size =>
+        fs.location match {
+          case index: PartitioningAwareFileIndex =>
+            val conf = df.sparkSession.sessionState.newHadoopConfWithOptions(fs.options)
+            val blocks = index.allFiles().flatMap(ParquetMeta.footerOf(_, conf).getBlocks.asScala)
+            val ranges = attrs.map(footerRange(blocks, _))
+            if (ranges.forall(_.isDefined)) Some(ranges.flatten) else None
+          case _ => None
+        }
+      case _ => None
+    }
+  }
+
+  /** A top-level column's (min, max) over `blocks` from their
+    * statistics: Some(None) when it holds no value, None when some row
+    * group's statistics cannot tell. */
+  private def footerRange(
+      blocks: Seq[BlockMetaData], column: Attribute): Option[Option[(Double, Double)]] = {
+    val perBlock = blocks.map { block =>
+      block.getColumns.asScala
+        .find(cc => cc.getPath.size == 1 && cc.getPath.toArray.head == column.name)
+        .filter(cc => storedAs(column.dataType, cc.getPrimitiveType))
+        .flatMap(cc => Option(cc.getStatistics))
+        .flatMap { st =>
+          if (st.hasNonNullValue) {
+            val lo = st.genericGetMin.asInstanceOf[Number].doubleValue
+            val hi = st.genericGetMax.asInstanceOf[Number].doubleValue
+            if (lo.isNaN || hi.isNaN) None else Some(Some((lo, hi)))
+          } else if (st.isNumNullsSet && st.getNumNulls == block.getRowCount) Some(None)
+          else None
+        }
+    }
+    if (perBlock.exists(_.isEmpty)) None
+    else {
+      val ranges = perBlock.flatten.flatten
+      Some(if (ranges.isEmpty) None else Some((ranges.map(_._1).min, ranges.map(_._2).max)))
+    }
+  }
+
+  /** Whether Spark reads values of parquet type `t` unchanged as `dt`,
+    * one of the four types whose footer statistics serve as bounds. */
+  private def storedAs(dt: DataType, t: PrimitiveType): Boolean = {
+    val logical = t.getLogicalTypeAnnotation
+    def signedInt(bits: Int): Boolean = logical == null || (logical match {
+      case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned && i.getBitWidth == bits
+      case _ => false
+    })
+    import PrimitiveType.PrimitiveTypeName._
+    (dt, t.getPrimitiveTypeName) match {
+      case (IntegerType, INT32) => signedInt(32)
+      case (LongType, INT64) => signedInt(64)
+      case (FloatType, FLOAT) | (DoubleType, DOUBLE) => logical == null
+      case _ => false
     }
   }
 
@@ -98,10 +194,8 @@ object ZOrder {
       cols: Seq[String],
       numFiles: Int,
       bits: Int = 16,
-      mode: String = "overwrite",
-      bounds: Option[Seq[Option[(Double, Double)]]] = None): Unit = {
-    val z = zvalueFromBounds(
-      bounds.getOrElse(columnBounds(df, cols)), cols, bits)
+      mode: String = "overwrite"): Unit = {
+    val z = zvalueFromBounds(columnBounds(df, cols), cols, bits)
     df.withColumn("__z", z)
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
@@ -115,7 +209,6 @@ object ZOrder {
   def fileRanges(path: String, column: String): Seq[(String, Long, Long)] =
     ParquetMeta.filesWithFooters(path).flatMap {
       case (file, footer) =>
-        import scala.jdk.CollectionConverters._
         val perBlock = footer.getBlocks.asScala.flatMap { block =>
           block.getColumns.asScala
             .find(_.getPath.toDotString == column)

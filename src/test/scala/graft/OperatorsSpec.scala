@@ -79,6 +79,17 @@ class ReconcileSpec extends SparkSpec {
   }
 }
 
+/** Exact token-set Jaccard for a pair of texts: the witness LSH
+  * candidates are checked against, not a production path. */
+object ExactJaccard {
+  def jaccard(t1: org.apache.spark.sql.Column, t2: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    val s1 = array_distinct(split(t1, " "))
+    val s2 = array_distinct(split(t2, " "))
+    val inter = size(array_intersect(s1, s2)).cast("double")
+    inter / (size(s1) + size(s2) - size(array_intersect(s1, s2))).cast("double")
+  }
+}
+
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -635,7 +646,7 @@ class DedupSpec extends SparkSpec {
     val j = docs.as("a").crossJoin(docs.as("b"))
       .filter($"a.doc_id" < $"b.doc_id")
       .select($"a.doc_id", $"b.doc_id",
-        Dedup.jaccard($"a.text", $"b.text").as("j"))
+        ExactJaccard.jaccard($"a.text", $"b.text").as("j"))
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(j((1L, 4L)) == 1.0)
     assert(j((1L, 2L)) > 0.7 && j((1L, 2L)) < 1.0)

@@ -480,7 +480,7 @@ class PlanSpec extends SparkSpec {
     // the rank window is keyed on the scan-local range id
     assert(p.contains("Exchange hashpartitioning(rid"), p)
     // r9: the approx range edges are registered column STATISTICS
-    // (mtime-keyed stats cache, the s7 columnBounds precedent), so the
+    // (mtime-keyed stats cache), so the
     // plan carries them as LITERAL comparisons in the scan projection —
     // no percentile subtree, no edge broadcast, no cross join
     assert(!p.contains("BroadcastNestedLoopJoin"), p)

@@ -1,8 +1,44 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.operators.Skew
+
+/** Salting for hot keys: the complementary *aggregation* strategy to
+  * AQE's runtime skew-join handling, for when one group key holds a
+  * disproportionate share of rows. Two-phase: partial-aggregate on
+  * (key, salt), spreading the hot key over `saltBuckets` reducers, then
+  * final-aggregate on the key. No query calls it; SkewSpec pins that it
+  * equals a direct aggregation. */
+object Skew {
+
+  /** Salted two-phase sum/count aggregation.
+    *
+    * @param aggs (outputName, valueColumn) pairs summed per key.
+    * Deterministic: results are identical to a direct groupBy — the salt
+    * only changes physical distribution. The salt is derived from a
+    * stable hash of a tiebreak column (not rand()) so re-runs and
+    * retried tasks agree.
+    */
+  def saltedSum(
+      df: DataFrame,
+      keyCol: String,
+      saltSource: Column,
+      aggs: Seq[(String, Column)],
+      saltBuckets: Int = 16): DataFrame = {
+    require(!aggs.exists(_._1 == keyCol) && !aggs.exists(_._1 == "n_rows"),
+      "agg output names must not collide with the key column or n_rows")
+    val salted = df.withColumn("__salt", pmod(xxhash64(saltSource), lit(saltBuckets)))
+    val partial = salted
+      .groupBy(col(keyCol), col("__salt"))
+      .agg(count(lit(1)).as("__cnt"),
+        aggs.map { case (n, c) => sum(c).as(s"__sum_$n") }: _*)
+    partial
+      .groupBy(col(keyCol)) // output keeps the caller's key column name
+      .agg(sum(col("__cnt")).as("n_rows"),
+        aggs.map { case (n, _) => sum(col(s"__sum_$n")).as(n) }: _*)
+  }
+}
 
 class SkewSpec extends SparkSpec {
   import spark.implicits._

@@ -281,6 +281,109 @@ class ParquetIOSpec extends SparkSpec {
     }
   }
 
+  /** Bytes read so far through the local file system, over all threads. */
+  private def localBytesRead(): Long = {
+    import scala.jdk.CollectionConverters._
+    org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getBytesRead).sum
+  }
+
+  /** sf0.001 `orders` keys in 4 range-partitioned part files, with a
+    * bloom filter on `o_orderkey`; returns the directory. */
+  private def bloomOrders(prefix: String): String = {
+    val dir = tmpDir(prefix) + "/t"
+    ParquetIO.write(spark.read.parquet(sf("orders"))
+      .select($"o_orderkey", $"o_custkey").repartitionByRange(4, $"o_orderkey"), dir,
+      bloomFilterCols = Seq("o_orderkey"), extraOptions = Map("parquet.enable.dictionary" -> "false"))
+    dir
+  }
+
+  test("a repeated bloom probe or row-group stats read of an unchanged table reads no bytes") {
+    val dir = bloomOrders("graft-meta-reuse")
+    val key = spark.read.parquet(dir).select($"o_orderkey").head().getLong(0)
+    val kept = ParquetMeta.bloomCandidateRowGroups(dir, "o_orderkey", key)
+    val stats = ParquetMeta.rowGroupStats(dir)
+    assert(kept.nonEmpty && stats.size == 4)
+    val before = localBytesRead()
+    assert(ParquetMeta.bloomCandidateRowGroups(dir, "o_orderkey", key) == kept)
+    assert(ParquetMeta.bloomCandidateRowGroups(dir, "o_orderkey", -1L).isEmpty)
+    assert(ParquetMeta.rowGroupStats(dir) == stats)
+    assert(localBytesRead() == before, "a cached footer or filter was read again")
+  }
+
+  test("a table overwritten through Spark is probed from its new files") {
+    val dir = tmpDir("graft-meta-overwrite") + "/t"
+    def write(keys: Seq[Long]): Unit = ParquetIO.write(keys.toDF("k").repartition(2), dir,
+      mode = "overwrite", bloomFilterCols = Seq("k"),
+      extraOptions = Map("parquet.enable.dictionary" -> "false"))
+    write(1L to 1000L)
+    assert(ParquetMeta.bloomCandidateRowGroups(dir, "k", 5000L).isEmpty)
+    assert(ParquetMeta.bloomCandidateRowGroups(dir, "k", 5L).nonEmpty)
+    val oldFiles = ParquetMeta.partFiles(dir).map(_.toString).toSet
+    write(4001L to 5000L)
+    val hits = ParquetMeta.bloomCandidateRowGroups(dir, "k", 5000L)
+    assert(hits.nonEmpty && hits.forall(h => !oldFiles.contains(h._1)))
+    // the old files' filters hold 5; the new ones prove it absent
+    assert(ParquetMeta.bloomCandidateRowGroups(dir, "k", 5L).isEmpty)
+    assert(ParquetIO.readPointLookup(spark, dir, "k", 5000L).collect().map(_.getLong(0)).toSeq ==
+      Seq(5000L))
+  }
+
+  test("concurrent probes of one cached table keep every present key's row group") {
+    val dir = tmpDir("graft-meta-threads") + "/t"
+    val df = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
+      .select($"l_orderkey", $"l_suppkey")
+      .repartition(1).sortWithinPartitions($"l_orderkey")
+    ParquetIO.write(df, dir, bloomFilterCols = Seq("l_orderkey"), bloomNdv = 20000,
+      extraOptions = Map(
+        "parquet.enable.dictionary" -> "false",
+        "parquet.block.size" -> "65536",
+        "parquet.page.size" -> "8192"))
+    import scala.jdk.CollectionConverters._
+    val file = ParquetMeta.partFiles(dir).head.toString
+    // the file is sorted on the key, so a present key lives in exactly
+    // the row groups whose [min, max] covers it
+    val ranges = ParquetMeta.footer(dir).getBlocks.asScala.toSeq.map { b =>
+      val st = b.getColumns.asScala.find(_.getPath.toDotString == "l_orderkey").get.getStatistics
+      (st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
+        st.genericGetMax.asInstanceOf[java.lang.Long].longValue)
+    }
+    assert(ranges.size >= 2, s"need several row groups, got ${ranges.size}")
+    val keys = new scala.util.Random(7).shuffle(
+      df.select($"l_orderkey").distinct().collect().map(_.getLong(0)).toSeq).take(800)
+    assert(keys.size == 800)
+    ParquetMeta.bloomCandidateRowGroups(dir, "l_orderkey", keys.head)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val missed = try {
+      keys.grouped(100).toSeq.map { batch =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Long]] {
+          def call(): Seq[Long] = batch.filterNot { k =>
+            val kept = ParquetMeta.bloomCandidateRowGroups(dir, "l_orderkey", k).toSet
+            ranges.indices.filter(i => ranges(i)._1 <= k && k <= ranges(i)._2)
+              .forall(i => kept.contains(file -> i))
+          }
+        })
+      }.flatMap(_.get())
+    } finally pool.shutdown()
+    assert(missed.isEmpty, s"${missed.size} present keys lost their row group, e.g. ${missed.take(5)}")
+  }
+
+  test("a key the bloom filters prove absent defines and collects without a Spark job") {
+    val dir = bloomOrders("graft-bloom-absent")
+    val key = spark.read.parquet(dir).select($"o_orderkey").head().getLong(0)
+    val hit = ParquetIO.readPointLookup(spark, dir, "o_orderkey", key)
+    var miss: org.apache.spark.sql.DataFrame = null
+    var rows: Array[org.apache.spark.sql.Row] = null
+    assert(jobsDuring {
+      miss = ParquetIO.readPointLookup(spark, dir, "o_orderkey", -1L)
+      rows = miss.collect()
+    } == 0)
+    assert(rows.isEmpty)
+    assert(miss.schema == hit.schema)
+    assert(hit.collect().map(_.getLong(0)).toSeq == Seq(key))
+    assertLookupSchema(dir, "o_orderkey", key, -1L)
+  }
+
   test("point-lookup schema keeps Spark's nullability on required nested columns") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -420,6 +523,33 @@ class AvroIOSpec extends SparkSpec {
     assert(df.select(col("id")).orderBy(col("id")).collect().map(_.getString(0)).toSeq ==
       Seq("1", "2", "3"))
   }
+  test("distributed read of a 2-file glob starts no job before its action and returns every row") {
+    import org.apache.avro.SchemaBuilder
+    import org.apache.avro.file.DataFileWriter
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    val schema = SchemaBuilder.record("Rows").fields()
+      .requiredLong("id")
+      .optionalString("name")
+      .endRecord()
+    val dir = tmpDir("graft-avro-glob")
+    for ((ids, i) <- Seq(0L until 50L, 50L until 120L).zipWithIndex) {
+      val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
+      try {
+        w.create(schema, new java.io.File(dir, f"part-$i%02d.avro"))
+        for (id <- ids) {
+          val r = new GenericData.Record(schema)
+          r.put("id", id)
+          r.put("name", if (id % 7 == 0) null else s"n$id")
+          w.append(r)
+        }
+      } finally w.close()
+    }
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { df = AvroIO.readDistributed(spark, s"$dir/*.avro") } == 0)
+    assert(df.columns.toSeq == Seq("id", "name"))
+    val rows = df.collect().map(r => (r.getLong(0), Option(r.getString(1)))).sortBy(_._1).toSeq
+    assert(rows == (0L until 120L).map(id => (id, if (id % 7 == 0) None else Some(s"n$id"))))
+  }
 }
 
 class ZOrderSpec extends SparkSpec {
@@ -482,6 +612,39 @@ class ZOrderSpec extends SparkSpec {
     val back = spark.read.parquet(zPath)
     assert(back.count() == li.count())
     assert(back.exceptAll(li).isEmpty && li.exceptAll(back).isEmpty)
+  }
+
+  /** Bounds from a min/max aggregate: the witness footer bounds are
+    * checked against. */
+  private def aggregateBounds(
+      df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Seq[Option[(Double, Double)]] = {
+    val aggs = cols.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
+    cols.indices.map(i =>
+      if (r.isNullAt(2 * i)) None else Some((r.getDouble(2 * i), r.getDouble(2 * i + 1))))
+  }
+
+  test("z bounds of a plain Parquet read come from footers, start no job and equal the aggregate's") {
+    val dir = "/root/testdata/sf0.01"
+    val lineitem = Tables(spark, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
+    for ((df, cols) <- Seq(
+        Tables(spark, dir, "orders") -> Seq("o_custkey", "o_totalprice"),
+        lineitem -> Seq("l_orderkey", "l_partkey"))) {
+      var bounds: Seq[Option[(Double, Double)]] = null
+      assert(jobsDuring { bounds = ZOrder.columnBounds(df, cols) } == 0, cols)
+      assert(bounds.forall(_.nonEmpty) && bounds == aggregateBounds(df, cols), cols)
+    }
+    // without column statistics the footers cannot answer: the
+    // aggregate runs and gives the same bounds
+    val noStats = tmpDir("graft-zbounds") + "/t"
+    Tables(spark, dir, "orders").select(col("o_custkey"), col("o_totalprice")).repartition(2)
+      .write.option("parquet.column.statistics.enabled", "false").parquet(noStats)
+    val df = spark.read.parquet(noStats)
+    val cols = Seq("o_custkey", "o_totalprice")
+    var bounds: Seq[Option[(Double, Double)]] = null
+    assert(jobsDuring { bounds = ZOrder.columnBounds(df, cols) } > 0)
+    assert(bounds == aggregateBounds(Tables(spark, dir, "orders"), cols))
   }
 
   test("footer stats prune files for predicates on the secondary z dimension") {
